@@ -7,24 +7,42 @@ set -x
 cd /root/repo
 R="${1:?usage: round_close_chain.sh r10}"
 
-SPARK_GRAFT_BENCH_OUT=/root/repo/BENCH_LOCAL_${R}.json \
+# Every artifact is written to X.tmp and moved over X only when its
+# command exits 0, so a snapshot taken mid-chain never commits a
+# truncated or empty file. A failed step leaves X.tmp for inspection.
+# settle OUT RC: promote OUT.tmp to OUT on rc 0; return RC.
+settle() {
+  [ "$2" -eq 0 ] && mv "$1.tmp" "$1"
+  return "$2"
+}
+# to_artifact OUT CMD...: run CMD with stdout into OUT.tmp, then settle.
+to_artifact() {
+  local out="$1"
+  shift
+  "$@" > "$out.tmp"
+  settle "$out" $?
+}
+
+SPARK_GRAFT_BENCH_OUT="$PWD/BENCH_LOCAL_${R}.json.tmp" \
   python3 bench.py > /tmp/bench_${R}_stdout.json 2>/tmp/bench_${R}.err
+settle "BENCH_LOCAL_${R}.json" $?
 echo "BENCH rc=$?"
 
-python3 scripts/dump_plans.py --hashes > /root/repo/PLANSHASH_${R}.json \
+to_artifact "PLANSHASH_${R}.json" python3 scripts/dump_plans.py --hashes \
   2>/tmp/planshash_${R}.err
 echo "PLANSHASH rc=$?"
 
 python3 scripts/driver_sim.py /root/testdata/sf0.01 \
-  --emit-json /root/repo/PARITY_${R}.json > /tmp/parity_${R}.log 2>&1
+  --emit-json "PARITY_${R}.json.tmp" > /tmp/parity_${R}.log 2>&1
+settle "PARITY_${R}.json" $?
 echo "PARITY rc=$?"
 
-python3 scripts/recall_report.py --deep > /root/repo/RECALL_${R}.json \
+to_artifact "RECALL_${R}.json" python3 scripts/recall_report.py --deep \
   2>/tmp/recall_${R}.err
 echo "RECALL rc=$?"
 
 SPARK_GRAFT_PROBE_RUNS=1 SPARK_GRAFT_PROBE_SCALES="sf0.1:/root/testdata/sf0.1:1,sf1_probe:/root/repo/scale_probe/sf1:10,sf10_probe:/root/repo/scale_probe/sf10:100" \
-  python3 scripts/scale_probe.py > /root/repo/SCALEPROBE_${R}_3pt.json \
+  to_artifact "SCALEPROBE_${R}_3pt.json" python3 scripts/scale_probe.py \
   2>/tmp/scale_probe_${R}.err
 echo "PROBE rc=$?"
 

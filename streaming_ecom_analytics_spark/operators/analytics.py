@@ -652,6 +652,16 @@ def rolling_time_features(
     )
 
 
+def quantize_6dp(col: Column) -> Column:
+    """``FLOOR(x·10⁶ + 0.5) / 10⁶`` — the 6-dp quantizer both engines
+    compute alike. ``ROUND(x, 6)`` breaks exact 7th-decimal ties
+    differently: Spark rounds the double's shortest decimal repr half-up
+    ((28.99 − 0.01)/448 → 0.064688) while DuckDB rounds the raw binary
+    (→ 0.064687). The floor form is the same IEEE ops on the same double
+    on both sides, and equals ROUND on every non-tie value."""
+    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
+
+
 def scale_features(
     df: DataFrame,
     *,
@@ -667,6 +677,8 @@ def scale_features(
     back onto the rows. Variance uses the sample (n-1) denominator;
     zero-variance or single-row groups yield NULL z (try_divide), and a
     constant column yields NULL min_max — never a throw, never ±inf.
+    Both features are quantized by :func:`quantize_6dp`, so exact
+    7th-decimal ties match the DuckDB oracle.
     """
     v = F.col(value_col).cast("decimal(18,2)")
     stats = df.groupBy(group_col).agg(
@@ -685,14 +697,13 @@ def scale_features(
         df.join(F.broadcast(stats), on=group_col)
         .select(
             "*",
-            F.round(F.try_divide(F.col(value_col) - mean, F.sqrt(var)), 6).alias(
+            quantize_6dp(F.try_divide(F.col(value_col) - mean, F.sqrt(var))).alias(
                 "z_score"
             ),
-            F.round(
+            quantize_6dp(
                 F.try_divide(
                     F.col(value_col) - F.col("__min"), F.col("__max") - F.col("__min")
-                ),
-                6,
+                )
             ).alias("min_max"),
         )
         .drop("__n", "__sum", "__sumsq", "__min", "__max")

@@ -905,8 +905,9 @@ _SCALE_ORACLE = """
       FROM events GROUP BY event_type
     )
     SELECT event_id, e.event_type,
-           ROUND((value - s / n) / NULLIF(sqrt((ss - s * s / n) / NULLIF(CAST(n - 1 AS DOUBLE), 0)), 0), 6) AS z_score,
-           ROUND((value - mn) / NULLIF(mx - mn, 0), 6) AS min_max
+           FLOOR((value - s / n) / NULLIF(sqrt((ss - s * s / n) / NULLIF(CAST(n - 1 AS DOUBLE), 0)), 0)
+                 * 1000000 + 0.5) / 1000000.0 AS z_score,
+           FLOOR((value - mn) / NULLIF(mx - mn, 0) * 1000000 + 0.5) / 1000000.0 AS min_max
     FROM events e JOIN stats USING (event_type)
 """
 
@@ -915,7 +916,9 @@ _SCALE_ORACLE = """
 def q_scaled_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type z-score and min-max normalization of the value
     column — feature scaling with exact-DECIMAL group statistics, so
-    the scaled features are bit-stable across engines/partitionings."""
+    the scaled features are bit-stable across engines/partitionings,
+    exact 7th-decimal ties included (both sides quantize with
+    ``FLOOR(x·10⁶ + 0.5)/10⁶``, see ``analytics.quantize_6dp``)."""
     ev = catalog.events(spark, sf_dir).select("event_id", "event_type", "value")
     return analytics.scale_features(ev, value_col="value", group_col="event_type").select(
         "event_id", "event_type", "z_score", "min_max"
@@ -2989,16 +2992,12 @@ def q_customer_spend_rank_profile(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     w = W.partitionBy("c_nationkey").orderBy(F.desc("cents"), F.asc("o_custkey"))
-
-    def _q6(col):
-        return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
     return spend.select(
         "c_nationkey",
         F.col("o_custkey").alias("c_custkey"),
         "cents",
-        _q6(F.percent_rank().over(w)).alias("spend_pct_rank"),
-        _q6(F.cume_dist().over(w)).alias("spend_cume_dist"),
+        analytics.quantize_6dp(F.percent_rank().over(w)).alias("spend_pct_rank"),
+        analytics.quantize_6dp(F.cume_dist().over(w)).alias("spend_cume_dist"),
         F.ntile(10).over(w).cast("long").alias("spend_decile"),
     )
 

@@ -8,17 +8,37 @@ guards use isEmpty() not count() (C3 — no second scan), failures
 isolate per reporting table like the reference's refresh loop
 (snowflake.py:55-61), and there is no cron: batch runs are invoked by
 the caller, streaming views run continuously (C1/C4).
+
+Only the extract is a barrier. The nine actions after it — publish,
+validation and one refresh per ``REPORTING_VIEWS`` entry — each read
+only the raw lake table the extract wrote and never another's output,
+so they run concurrently on one thread pool: one thread per action, at
+most ``defaultParallelism``. Each is a few one- or two-task
+jobs whose cost is mostly the per-job driver floor; overlapping them
+fills the cores that a serial loop leaves idle. Every pool target is
+wrapped in ``inheritable_thread_target``, so its jobs keep the caller's
+job group, scheduler pool and other local properties.
+
+Errors: a refresh that raises is logged and listed in ``failed``, and
+the rest still run. An exception from publish or validation leaves
+``run_batch_cycle`` once the pool has drained — publish's first, then
+validation's — so the views may already be refreshed by then, which is
+correct because they depend only on the raw lake. A ``publish``
+callback runs on a pool thread, concurrently with the other actions.
 """
 
 from __future__ import annotations
 
 import logging
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from streaming_ecom_analytics_spark.operators import aggregates, validation
 from streaming_ecom_analytics_spark.operators.ingest import ingest_events, read_raw_csv
+from streaming_ecom_analytics_spark.schema import ECOM_EVENT_LAKE_SCHEMA
 from streaming_ecom_analytics_spark.sources.kafka_contract import serialize_events
 from streaming_ecom_analytics_spark.sources.lake import Lake
 
@@ -56,15 +76,17 @@ def run_batch_cycle(
     publish: Callable[[DataFrame], None] | None = None,
 ) -> dict:
     """One extract → publish → validate → materialize cycle."""
-    # 1. extract (extractor.py:89-164 parity)
+    # 1. extract (extractor.py:89-164 parity). The declared schema lets an
+    # empty extract (the write leaves only _SUCCESS) read as empty.
     raw = read_raw_csv(spark, csv_path)
     stats = ingest_events(spark, raw, lake, daily_sample_n=daily_sample_n)
-    events = lake.read(spark, "raw", "events")
+    events = lake.read(spark, "raw", "events", schema=ECOM_EVENT_LAKE_SCHEMA)
 
     # 2. publish — distributed serialization; guard on isEmpty (C3)
-    if events.isEmpty():
-        log.warning("no events extracted; skipping publish")
-    else:
+    def publish_events() -> None:
+        if events.isEmpty():
+            log.warning("no events extracted; skipping publish")
+            return
         wire = serialize_events(events.drop("event_date"))
         if publish is not None:
             publish(wire)
@@ -72,25 +94,38 @@ def run_batch_cycle(
             lake.write(wire, "processed", "events_wire")
 
     # 3. validate (snowflake.py:15-47 parity)
-    quality = validation.validate_events(
-        events,
-        key_cols=("product_id", "category_id", "event_time", "user_id"),
-        ts_col="event_time",
-    ).first()
+    def validate():
+        return validation.validate_events(
+            events,
+            key_cols=("product_id", "category_id", "event_time", "user_id"),
+            ts_col="event_time",
+        ).first()
 
-    # 4. materialize with per-view error isolation (snowflake.py:55-61)
+    # 4. materialize (snowflake.py:55-61)
+    def refresh(name: str) -> None:
+        lake.refresh(REPORTING_VIEWS[name](events), name)
+
+    inherit = inheritable_thread_target(spark)
+    n_actions = 2 + len(REPORTING_VIEWS)
+    with ThreadPoolExecutor(min(n_actions, spark.sparkContext.defaultParallelism)) as pool:
+        published = pool.submit(inherit(publish_events))
+        quality = pool.submit(inherit(validate))
+        views = {name: pool.submit(inherit(refresh), name) for name in REPORTING_VIEWS}
+
+    # per-view error isolation, in registry order
     refreshed, failed = [], []
-    for name, build in REPORTING_VIEWS.items():
-        try:
-            lake.refresh(build(events), name)
+    for name, view in views.items():
+        exc = view.exception()
+        if exc is None:
             refreshed.append(name)
-        except Exception:
-            log.exception("refresh failed for %s", name)
+        else:
+            log.error("refresh failed for %s", name, exc_info=exc)
             failed.append(name)
+    published.result()
 
     return {
         "ingest": stats,
-        "quality": quality.asDict(),
+        "quality": quality.result().asDict(),
         "refreshed": refreshed,
         "failed": failed,
     }

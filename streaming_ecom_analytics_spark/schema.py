@@ -37,6 +37,15 @@ ECOM_EVENT_RAW_SCHEMA = T.StructType(
     [T.StructField(f.name, T.StringType(), True) for f in ECOM_EVENT_SCHEMA.fields]
 )
 
+# Raw lake events table: what ingest writes, date-partitioned. Every
+# column is nullable (unparseable timestamps land in the null-date
+# partition) and event_date, the partition column, comes last. Readers
+# declare it, so an empty extract (no data files) still has a schema.
+ECOM_EVENT_LAKE_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in ECOM_EVENT_SCHEMA.fields]
+    + [T.StructField("event_date", T.DateType(), True)]
+)
+
 # ISO-8601 millisecond timestamp contract of the Kafka producer
 # (producer.py:36 truncates %f to milliseconds; regex gate producer.py:18-20).
 EVENT_TIME_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSS"

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class Lake:
@@ -55,8 +56,13 @@ class Lake:
         (reference snowflake_refresh.py:5-80) — an atomic overwrite here."""
         return self.write(df, "reporting", table, mode="overwrite")
 
-    def read(self, spark: SparkSession, layer: str, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(layer, table))
+    def read(
+        self, spark: SparkSession, layer: str, table: str, *, schema: StructType | None = None
+    ) -> DataFrame:
+        """Read a table; with ``schema`` there is no inference, so a table
+        written from an empty frame (``_SUCCESS`` only) still reads."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path(layer, table))
 
     def write_bucketed(
         self,

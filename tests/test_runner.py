@@ -21,13 +21,16 @@ CSV_ROWS = [
 ]
 
 
+def _cycle_on(spark, root, rows, **kwargs):
+    csv = root / "events.csv"
+    csv.write_text(CSV_HEADER + "\n" + "".join(r + "\n" for r in rows))
+    lake = Lake(str(root / "warehouse"))
+    return lake, run_batch_cycle(spark, lake, csv_path=str(csv), daily_sample_n=100, **kwargs)
+
+
 @pytest.fixture(scope="module")
 def cycle(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("lake")
-    csv = root / "events.csv"
-    csv.write_text(CSV_HEADER + "\n" + "\n".join(CSV_ROWS) + "\n")
-    lake = Lake(str(root / "warehouse"))
-    result = run_batch_cycle(spark, lake, csv_path=str(csv), daily_sample_n=100)
+    lake, result = _cycle_on(spark, tmp_path_factory.mktemp("lake"), CSV_ROWS)
     return spark, lake, result
 
 
@@ -78,3 +81,50 @@ def test_aov_uses_sessions(cycle):
     }
     # day 1: one purchase session s1 → 9.99; day 2: s3 → 40.0
     assert out == {"2019-11-01": 9.99, "2019-11-02": 40.0}
+
+
+def test_header_only_csv_is_an_empty_cycle(spark, tmp_path):
+    # the ingest writes only _SUCCESS; the declared lake schema reads it
+    published = []
+    _, result = _cycle_on(spark, tmp_path, [], publish=published.append)
+    assert result["ingest"].total_events == 0
+    assert result["quality"]["total_rows"] == 0
+    assert result["failed"] == []
+    assert result["refreshed"] == list(REPORTING_VIEWS)
+    assert published == []
+
+
+def test_failing_view_is_isolated_in_registry_order(spark, tmp_path, monkeypatch):
+    def boom(ev):
+        raise RuntimeError("view build failed")
+
+    monkeypatch.setitem(REPORTING_VIEWS, "conversion_funnel", boom)
+    lake, result = _cycle_on(spark, tmp_path, CSV_ROWS)
+    assert result["failed"] == ["conversion_funnel"]
+    assert result["refreshed"] == [v for v in REPORTING_VIEWS if v != "conversion_funnel"]
+    assert lake.read(spark, "reporting", "daily_revenue").count() == 2
+
+
+def test_publish_callback_error_propagates(spark, tmp_path):
+    def publish(wire):
+        raise RuntimeError("broker down")
+
+    with pytest.raises(RuntimeError, match="broker down"):
+        _cycle_on(spark, tmp_path, CSV_ROWS, publish=publish)
+
+
+def test_cycle_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("batch-cycle-under-test", "runner job group test")
+    try:
+        _cycle_on(spark, tmp_path, CSV_ROWS)
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    # ingest, publish, validation and 7 refreshes: at least one job each
+    assert len(tracker.getJobIdsForGroup("batch-cycle-under-test")) >= 10
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

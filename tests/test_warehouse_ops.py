@@ -565,7 +565,10 @@ def test_rolling_time_features_same_timestamp_peers(spark):
 
 def test_scale_features_zscore_and_minmax(spark):
     df = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "a", 2.0), (3, "a", 3.0), (4, "b", 7.0), (5, "b", 7.0)],
+        [
+            (1, "a", 1.0), (2, "a", 2.0), (3, "a", 3.0), (4, "b", 7.0), (5, "b", 7.0),
+            (6, "c", 0.01), (7, "c", 448.01), (8, "c", 28.99),
+        ],
         "event_id long, event_type string, value double",
     )
     out = {r["event_id"]: r for r in analytics.scale_features(df).collect()}
@@ -574,6 +577,9 @@ def test_scale_features_zscore_and_minmax(spark):
     assert (out[1]["min_max"], out[2]["min_max"], out[3]["min_max"]) == (0.0, 0.5, 1.0)
     # group b: zero variance -> NULL z; constant column -> NULL min_max
     assert out[4]["z_score"] is None and out[4]["min_max"] is None
+    # group c: (28.99 - 0.01) / 448 is the double just below 0.0646875;
+    # it quantizes down, as DuckDB's ROUND does (Spark's ROUND gives .064688)
+    assert out[8]["min_max"] == 0.064687
 
 
 def test_negative_samples_excludes_positives_and_is_deterministic(spark):
