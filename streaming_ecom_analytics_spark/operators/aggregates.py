@@ -1,5 +1,7 @@
 """The analytic aggregates — the reference's six reporting tables plus the
-dashboard top-K tile, as composable DataFrame transforms.
+dashboard top-K tile, as composable DataFrame transforms. These are the
+only implementation of the family: the batch runner's ``REPORTING_VIEWS``
+and the registry's oracle-checked queries both call them.
 
 Reference semantics (file:line into /root/reference/):
 - daily_revenue                    airflow_docker/dags/utils/snowflake_refresh.py:6-15
@@ -10,18 +12,27 @@ Reference semantics (file:line into /root/reference/):
 - daily_active_users_by_event_type snowflake_refresh.py:69-79
 - top_revenue_by_category          README.md:95-97 (dashboard-only tile)
 
-Every function takes an events DataFrame and column names (defaults match
-the driver testdata's ``events`` table: ts/user_id/event_type/value) and
-returns a lazy DataFrame. All are single-shuffle hash aggregates; Catalyst
-plans the partial/final split, pushes the event_type filters into the
-parquet scan, and prunes to the 2-4 referenced columns.
+Every function takes an events DataFrame with an ``event_type`` column
+whose purchase stage is ``'purchase'``, plus the names of the columns
+that differ between the driver testdata's ``events`` table (the
+defaults: ts/user_id/value) and the reference's ecom schema. Each
+returns a lazy DataFrame. All are single-shuffle hash aggregates;
+Catalyst plans the partial/final split, pushes the event_type filters
+into the parquet scan, and prunes to the 2-4 referenced columns.
+
+Money rule: every revenue figure goes through ``money_sum`` — each
+price cast to DECIMAL(18,2), summed exactly, cast back to DOUBLE — so
+the result does not depend on floating-point summation order and
+matches the DuckDB oracle's ``CAST(SUM(CAST(x AS DECIMAL(18,2))) AS
+DOUBLE)`` (``SQL_MONEY_SUM``).
 
 Scale notes (100 TB posture):
 - Filters precede aggregation so pushdown reaches the scan.
 - Top-K queries use orderBy+limit which Spark fuses into
   TakeOrderedAndProject (no global sort materialization).
-- The anti-join's right side is a distinct user set — small relative to
-  the fact table — and is explicitly broadcast.
+- Nothing else sorts. A refresh is a parquet overwrite, and a
+  multi-file table has no row order a reader could rely on, so an
+  unbounded orderBy would buy a range shuffle and a sort for nothing.
 - countDistinct expands via RewriteDistinctAggregates (two-phase); the
   streaming layer swaps it for approx_count_distinct (see streaming/).
 """
@@ -31,6 +42,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# The oracle side of money_sum, as DuckDB SQL text.
+SQL_MONEY_SUM = "CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
+
+
+def money_sum(col: str) -> Column:
+    """Exact money sum: DOUBLE → DECIMAL(18,2) → SUM (exact) → DOUBLE."""
+    return F.sum(F.col(col).cast("decimal(18,2)")).cast("double")
+
 
 def _day(ts_col: str) -> Column:
     # DATE_TRUNC('DAY', ...) per snowflake_refresh.py:10 — keep timestamp
@@ -38,74 +57,54 @@ def _day(ts_col: str) -> Column:
     return F.date_trunc("day", F.col(ts_col))
 
 
-def daily_revenue(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    price_col: str = "value",
-    purchase_type: str = "purchase",
-    type_col: str = "event_type",
-) -> DataFrame:
+def _purchases() -> Column:
+    return F.col("event_type") == "purchase"
+
+
+def daily_revenue(events: DataFrame, *, ts_col: str = "ts", price_col: str = "value") -> DataFrame:
     """Total purchase revenue per day, 2-dp rounded (snowflake_refresh.py:6-15)."""
     return (
-        events.filter(F.col(type_col) == purchase_type)
+        events.filter(_purchases())
         .groupBy(_day(ts_col).alias("event_date"))
-        .agg(F.round(F.sum(price_col), 2).alias("total_revenue"))
+        .agg(F.round(money_sum(price_col), 2).alias("total_revenue"))
     )
 
 
-def top_selling_brands(
-    events: DataFrame,
-    *,
-    brand_col: str,
-    price_col: str = "value",
-    purchase_type: str = "purchase",
-    type_col: str = "event_type",
-    k: int = 10,
-) -> DataFrame:
-    """Top-K brands by purchase revenue (snowflake_refresh.py:17-28).
+def top_selling_brands(events: DataFrame) -> DataFrame:
+    """Top-10 brands by purchase revenue on the ecom schema
+    (snowflake_refresh.py:17-28).
 
     orderBy+limit fuses to TakeOrderedAndProject: each partition keeps a
     K-row heap, the driver merges K*numPartitions rows — no global sort.
     Ties broken by brand name for determinism.
     """
     return (
-        events.filter((F.col(type_col) == purchase_type) & F.col(brand_col).isNotNull())
-        .groupBy(F.col(brand_col).alias("brand"))
-        .agg(F.round(F.sum(price_col), 2).alias("revenue"))
+        events.filter(_purchases() & F.col("brand").isNotNull())
+        .groupBy("brand")
+        .agg(F.round(money_sum("price"), 2).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("brand"))
-        .limit(k)
+        .limit(10)
     )
 
 
 def conversion_funnel(
-    events: DataFrame,
-    *,
-    type_col: str = "event_type",
-    funnel_types: tuple[str, ...] = ("view", "cart", "purchase"),
+    events: DataFrame, *, funnel_types: tuple[str, ...] = ("view", "cart", "purchase")
 ) -> DataFrame:
     """Event counts for the funnel stages (snowflake_refresh.py:30-39)."""
     return (
-        events.filter(F.col(type_col).isin(*funnel_types))
-        .groupBy(F.col(type_col).alias("event_type"))
+        events.filter(F.col("event_type").isin(*funnel_types))
+        .groupBy("event_type")
         .agg(F.count("*").alias("event_count"))
     )
 
 
-def abandoned_cart_users(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    cart_type: str = "cart",
-    purchase_type: str = "purchase",
-) -> DataFrame:
+def abandoned_cart_users(events: DataFrame, *, cart_type: str = "cart") -> DataFrame:
     """Cart-event counts for users who never purchased
     (snowflake_refresh.py:41-56).
 
     The reference writes ``NOT IN (SELECT DISTINCT user_id ...)``; we
-    author it as a broadcast left_anti join. SQL NOT IN collapses to empty
-    on NULLs in the subquery — the reference's cleaning guarantees
+    author it as a left_anti join. SQL NOT IN collapses to empty on
+    NULLs in the subquery — the reference's cleaning guarantees
     non-null user_id (extractor.py:110, audited snowflake.py:32), so
     left_anti is the correct and safer realization, and Catalyst itself
     rewrites NOT IN to a null-aware anti join anyway.
@@ -118,15 +117,12 @@ def abandoned_cart_users(
     forced hint here would OOM executors once the purchaser set reaches
     GB scale.
     """
-    carts = events.filter(F.col(type_col) == cart_type)
-    purchasers = (
-        events.filter(F.col(type_col) == purchase_type).select(F.col(user_col)).distinct()
-    )
+    carts = events.filter(F.col("event_type") == cart_type)
+    purchasers = events.filter(_purchases()).select("user_id").distinct()
     return (
-        carts.join(purchasers, on=user_col, how="left_anti")
-        .groupBy(F.col(user_col).alias("user_id"))
+        carts.join(purchasers, on="user_id", how="left_anti")
+        .groupBy("user_id")
         .agg(F.count("*").alias("cart_events"))
-        .orderBy(F.desc("cart_events"), F.asc("user_id"))
     )
 
 
@@ -136,8 +132,6 @@ def average_order_value_daily(
     ts_col: str = "ts",
     price_col: str = "value",
     order_key_col: str = "user_id",
-    purchase_type: str = "purchase",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """SUM(price)/COUNT(DISTINCT order_key) per day (snowflake_refresh.py:58-67).
 
@@ -145,10 +139,10 @@ def average_order_value_daily(
     use user_id. Exact distinct in batch; streaming uses approx (ST7).
     """
     return (
-        events.filter(F.col(type_col) == purchase_type)
+        events.filter(_purchases())
         .groupBy(_day(ts_col).alias("event_date"))
         .agg(
-            F.round(F.sum(price_col) / F.countDistinct(order_key_col), 2).alias(
+            F.round(money_sum(price_col) / F.countDistinct(order_key_col), 2).alias(
                 "average_order_value"
             )
         )
@@ -156,37 +150,25 @@ def average_order_value_daily(
 
 
 def daily_active_users_by_event_type(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
+    events: DataFrame, *, ts_col: str = "ts", user_col: str = "user_id"
 ) -> DataFrame:
     """COUNT(DISTINCT user) per (day, event_type) (snowflake_refresh.py:69-79)."""
-    return (
-        events.groupBy(_day(ts_col).alias("event_date"), F.col(type_col).alias("event_type"))
-        .agg(F.countDistinct(user_col).alias("daily_active_users"))
-        .orderBy(F.desc("event_date"), F.asc("event_type"))
+    return events.groupBy(_day(ts_col).alias("event_date"), "event_type").agg(
+        F.countDistinct(user_col).alias("daily_active_users")
     )
 
 
 def top_revenue_by_category(
-    events: DataFrame,
-    *,
-    category_col: Column | str,
-    price_col: str = "value",
-    purchase_type: str = "purchase",
-    type_col: str = "event_type",
-    k: int = 15,
+    events: DataFrame, *, category_col: Column | str, price_col: str = "value"
 ) -> DataFrame:
-    """Top-K categories by purchase revenue (README.md:95-97 tile)."""
+    """Top-15 categories by purchase revenue (README.md:95-97 tile)."""
     cat = F.col(category_col) if isinstance(category_col, str) else category_col
     return (
-        events.filter((F.col(type_col) == purchase_type) & cat.isNotNull())
+        events.filter(_purchases() & cat.isNotNull())
         .groupBy(cat.alias("category"))
-        .agg(F.round(F.sum(price_col), 2).alias("revenue"))
+        .agg(F.round(money_sum(price_col), 2).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("category"))
-        .limit(k)
+        .limit(15)
     )
 
 

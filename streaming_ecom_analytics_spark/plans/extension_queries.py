@@ -2899,6 +2899,65 @@ def q_lm_generalization_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hardest_negative_triplets(x: DataFrame, pos: DataFrame) -> DataFrame:
+    """The contrastive miners' shared tail: every positive pair
+    ``pos`` (id_a, id_b, cosine) becomes two (anchor, positive)
+    anchors, and each anchor gets its hardest negative in its block of
+    ``x`` (vec_id, v, blk) — the most similar vector with cos < 0.45,
+    cosines rounded to 6 dp, ties to the smallest id.
+
+    The hardest negative is a PER-ANCHOR property (a positive has
+    cos ≥ 0.45 and can never qualify), so ONE applyInArrow float64 Gram
+    per block computes every vector's hardest-below-threshold block
+    neighbor, and a pairs-sized join attaches it to the anchors."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    def hardest_negative(tbl: pa.Table) -> pa.Table:
+        ids = tbl.column("vec_id").to_numpy().astype(np.int64)
+        v = np.asarray(
+            tbl.column("v").combine_chunks().flatten(), dtype=np.float64
+        ).reshape(len(ids), -1)
+        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
+        g = np.round((v @ v.T) / np.outer(nrm, nrm), 6)
+        np.fill_diagonal(g, np.inf)  # self never a negative
+        g[g >= 0.45] = -np.inf  # positives/above-threshold excluded
+        best = g.max(axis=1)
+        keep = np.isfinite(best)
+        bid = np.where(
+            g == best[:, None], ids[None, :], np.iinfo(np.int64).max
+        ).min(axis=1)  # tie → smallest id
+        return pa.Table.from_pandas(
+            pd.DataFrame(
+                {
+                    "anchor_id": ids[keep],
+                    "negative_id": bid[keep],
+                    "cos_neg": best[keep],
+                }
+            ),
+            preserve_index=False,
+        )
+
+    hn = x.groupBy("blk").applyInArrow(
+        hardest_negative, schema="anchor_id long, negative_id long, cos_neg double"
+    )
+    anchors = pos.select(
+        F.col("id_a").alias("anchor_id"),
+        F.col("id_b").alias("positive_id"),
+        F.col("cosine").alias("cos_pos"),
+    ).unionByName(
+        pos.select(
+            F.col("id_b").alias("anchor_id"),
+            F.col("id_a").alias("positive_id"),
+            F.col("cosine").alias("cos_pos"),
+        )
+    )
+    return anchors.join(hn, on="anchor_id").select(
+        "anchor_id", "positive_id", "negative_id", "cos_pos", "cos_neg"
+    )
+
+
 @register(
     "contrastive_pairs",
     """
@@ -2963,12 +3022,7 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence is proven by the same DuckDB oracle at every shipped
     SF (hash-green, driver_sim) plus the unit suite; interleaved A/B
     below in OPTIMIZATION_r12.md."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
-    emb = catalog.embeddings(spark, sf_dir)
-    x = emb.select(
+    x = catalog.embeddings(spark, sf_dir).select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
         (
@@ -2976,53 +3030,10 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             % 8
         ).alias("blk"),
     )
-
-    def hardest_negative(tbl: pa.Table) -> pa.Table:
-        ids = tbl.column("vec_id").to_numpy().astype(np.int64)
-        v = np.asarray(
-            tbl.column("v").combine_chunks().flatten(), dtype=np.float64
-        ).reshape(len(ids), -1)
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        g = np.round((v @ v.T) / np.outer(nrm, nrm), 6)
-        np.fill_diagonal(g, np.inf)  # self never a negative
-        g[g >= 0.45] = -np.inf  # at/above threshold excluded
-        best = g.max(axis=1)
-        keep = np.isfinite(best)
-        bid = np.where(
-            g == best[:, None], ids[None, :], np.iinfo(np.int64).max
-        ).min(axis=1)  # tie → smallest id
-        return pa.Table.from_pandas(
-            pd.DataFrame(
-                {
-                    "anchor_id": ids[keep],
-                    "negative_id": bid[keep],
-                    "cos_neg": best[keep],
-                }
-            ),
-            preserve_index=False,
-        )
-
-    hn = x.groupBy("blk").applyInArrow(
-        hardest_negative, schema="anchor_id long, negative_id long, cos_neg double"
-    )
     # the near-dup subtree (block-Gram candidates + exact verify) is by
-    # far the expensive part and BOTH union branches below consume it —
-    # shared/persisted so it executes once, not twice
-    pos = _shared_emb_pairs_block(spark, sf_dir)
-    anchors = pos.select(
-        F.col("id_a").alias("anchor_id"),
-        F.col("id_b").alias("positive_id"),
-        F.col("cosine").alias("cos_pos"),
-    ).unionByName(
-        pos.select(
-            F.col("id_b").alias("anchor_id"),
-            F.col("id_a").alias("positive_id"),
-            F.col("cosine").alias("cos_pos"),
-        )
-    )
-    return anchors.join(hn, on="anchor_id").select(
-        "anchor_id", "positive_id", "negative_id", "cos_pos", "cos_neg"
-    )
+    # far the expensive part and BOTH union branches of the anchors
+    # consume it — shared/persisted so it executes once, not twice
+    return _hardest_negative_triplets(x, _shared_emb_pairs_block(spark, sf_dir))
 
 
 @register(

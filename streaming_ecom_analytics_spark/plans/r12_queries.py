@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from streaming_ecom_analytics_spark import catalog
 from streaming_ecom_analytics_spark.functions import dedup
 from streaming_ecom_analytics_spark.plans.extension_queries import (
+    _hardest_negative_triplets,
     _shared_emb_pairs_ivf256,
 )
 from streaming_ecom_analytics_spark.plans.registry import register
@@ -105,63 +106,14 @@ def q_contrastive_pairs_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive) with the same round-6-then-argmax tie rule; cosines are
     numpy float64 dots rounded to 6 dp — hash-equal to the oracle's
     list_dot_product at every shipped SF (driver_sim-verified)."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
     n_rows = catalog.parquet_num_rows(sf_dir, "embeddings")
     n_blocks = max(1, -(-n_rows // 256))  # ceil
-    emb = catalog.embeddings(spark, sf_dir)
-    x = emb.select(
+    x = catalog.embeddings(spark, sf_dir).select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
         (F.col("vec_id") % n_blocks).alias("blk"),
     )
-
-    def hardest_negative(tbl: pa.Table) -> pa.Table:
-        ids = tbl.column("vec_id").to_numpy().astype(np.int64)
-        v = np.asarray(
-            tbl.column("v").combine_chunks().flatten(), dtype=np.float64
-        ).reshape(len(ids), -1)
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        g = np.round((v @ v.T) / np.outer(nrm, nrm), 6)
-        np.fill_diagonal(g, np.inf)  # self never a negative
-        g[g >= 0.45] = -np.inf  # positives/above-threshold excluded
-        best = g.max(axis=1)
-        keep = np.isfinite(best)
-        # tie rule: smallest id among equal-best cosines
-        bid = np.where(g == best[:, None], ids[None, :], np.iinfo(np.int64).max).min(
-            axis=1
-        )
-        return pa.Table.from_pandas(
-            pd.DataFrame(
-                {
-                    "anchor_id": ids[keep],
-                    "negative_id": bid[keep],
-                    "cos_neg": best[keep],
-                }
-            ),
-            preserve_index=False,
-        )
-
-    hn = x.groupBy("blk").applyInArrow(
-        hardest_negative, schema="anchor_id long, negative_id long, cos_neg double"
-    )
-    pos = _shared_emb_pairs_ivf256(spark, sf_dir)
-    anchors = pos.select(
-        F.col("id_a").alias("anchor_id"),
-        F.col("id_b").alias("positive_id"),
-        F.col("cosine").alias("cos_pos"),
-    ).unionByName(
-        pos.select(
-            F.col("id_b").alias("anchor_id"),
-            F.col("id_a").alias("positive_id"),
-            F.col("cosine").alias("cos_pos"),
-        )
-    )
-    return anchors.join(hn, on="anchor_id").select(
-        "anchor_id", "positive_id", "negative_id", "cos_pos", "cos_neg"
-    )
+    return _hardest_negative_triplets(x, _shared_emb_pairs_ivf256(spark, sf_dir))
 
 
 @register("corpus_signature_build", None)

@@ -8,7 +8,9 @@ Conventions that keep the driver's hash-compare green:
   DuckDB's date_trunc yields DATE, and DATE materializes differently
   into pandas across the two engines (datetime.date vs datetime64);
 - money sums go through DECIMAL(18,2) and back to DOUBLE so the result
-  is exact and independent of floating-point summation order;
+  is exact and independent of floating-point summation order — the rule
+  lives in ``aggregates.money_sum`` (Spark) and ``aggregates.SQL_MONEY_SUM``
+  (oracle SQL);
 - conditional counts use COUNT(CASE ...) (BIGINT in both engines;
   DuckDB SUM(int) widens to HUGEINT);
 - top-K queries carry a deterministic tiebreak in the ORDER BY.
@@ -38,26 +40,21 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class RegisteredQuery:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
-    headline: bool = False  # included in bench.py's timed set
+    headline: bool = False  # its plan is dumped into PLANS.md by scripts/dump_plans.py
 
 
 REGISTRY: dict[str, RegisteredQuery] = {}
 
 
 def register(name: str, oracle: str | None, *, headline: bool = False):
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn: QueryFn) -> QueryFn:
         REGISTRY[name] = RegisteredQuery(fn=fn, oracle=oracle, headline=headline)
         return fn
 
     return deco
-
-
-# Exact money arithmetic: DOUBLE → DECIMAL(18,2) → SUM (exact) → DOUBLE.
-def _money_sum(col: str):
-    return F.sum(F.col(col).cast("decimal(18,2)")).cast("double")
-
-
-_SQL_MONEY_SUM = "CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +67,7 @@ _SQL_MONEY_SUM = "CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
     "daily_revenue",
     f"""
     SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS event_date,
-           ROUND({_SQL_MONEY_SUM.format(col='value')}, 2) AS total_revenue
+           ROUND({aggregates.SQL_MONEY_SUM.format(col='value')}, 2) AS total_revenue
     FROM events
     WHERE event_type = 'purchase'
     GROUP BY CAST(CAST(ts AS DATE) AS TIMESTAMP)
@@ -79,12 +76,7 @@ _SQL_MONEY_SUM = "CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
 )
 def q_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 (snowflake_refresh.py:6-15): purchase revenue per day."""
-    return (
-        catalog.events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("event_date"))
-        .agg(F.round(_money_sum("value"), 2).alias("total_revenue"))
-    )
+    return aggregates.daily_revenue(catalog.events(spark, sf_dir))
 
 
 @register(
@@ -105,6 +97,21 @@ def q_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return aggregates.conversion_funnel(
         catalog.events(spark, sf_dir), funnel_types=("view", "click", "purchase")
     )
+
+
+def _clicks_without_same_day_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_date, user_id) per click ('cart') on a day with no purchase
+    by that user — the compound-key left_anti both day-scoped
+    abandoned-cart queries aggregate."""
+    ev = catalog.events(spark, sf_dir)
+    day = F.date_trunc("day", "ts").alias("event_date")
+    clicks = ev.filter(F.col("event_type") == "click").select(day, "user_id")
+    purchase_days = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(day, "user_id")
+        .distinct()
+    )
+    return clicks.join(purchase_days, on=["event_date", "user_id"], how="left_anti")
 
 
 @register(
@@ -135,16 +142,8 @@ def q_abandoned_cart_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-green proved nothing (round-10 verdict #1). This headline twin
     exercises the identical anti-join + groupBy composition with
     spark_rows > 0 at every shipped SF (15 / 150 / 1499)."""
-    ev = catalog.events(spark, sf_dir)
-    day = F.date_trunc("day", "ts").alias("event_date")
-    clicks = ev.filter(F.col("event_type") == "click").select(day, "user_id")
-    purchase_days = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(day, "user_id")
-        .distinct()
-    )
     return (
-        clicks.join(purchase_days, on=["event_date", "user_id"], how="left_anti")
+        _clicks_without_same_day_purchase(spark, sf_dir)
         .groupBy("user_id")
         .agg(F.count("*").alias("cart_events"))
     )
@@ -169,9 +168,7 @@ def q_abandoned_cart_users_alltime(spark: SparkSession, sf_dir: str) -> DataFram
     reference parity; the non-vacuous driver signal lives in
     ``abandoned_cart_users`` / ``abandoned_carts_daily``, and the
     non-empty case is unit-covered (tests/test_runner.py)."""
-    return aggregates.abandoned_cart_users(
-        catalog.events(spark, sf_dir), cart_type="click", purchase_type="purchase"
-    )
+    return aggregates.abandoned_cart_users(catalog.events(spark, sf_dir), cart_type="click")
 
 
 @register(
@@ -194,16 +191,8 @@ def q_abandoned_carts_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs with clicks but no same-day purchase — a compound-key
     left_anti join, non-degenerate on the testdata (the user-level
     variant is empty there because every user eventually purchases)."""
-    ev = catalog.events(spark, sf_dir)
-    day = F.date_trunc("day", "ts").alias("event_date")
-    clicks = ev.filter(F.col("event_type") == "click").select(day, "user_id")
-    purchase_days = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(day, "user_id")
-        .distinct()
-    )
     return (
-        clicks.join(purchase_days, on=["event_date", "user_id"], how="left_anti")
+        _clicks_without_same_day_purchase(spark, sf_dir)
         .groupBy("event_date", "user_id")
         .agg(F.count("*").alias("cart_events"))
     )
@@ -213,7 +202,7 @@ def q_abandoned_carts_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     "average_order_value_daily",
     f"""
     SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS event_date,
-           ROUND({_SQL_MONEY_SUM.format(col='value')} / COUNT(DISTINCT user_id), 2)
+           ROUND({aggregates.SQL_MONEY_SUM.format(col='value')} / COUNT(DISTINCT user_id), 2)
              AS average_order_value
     FROM events
     WHERE event_type = 'purchase'
@@ -223,16 +212,7 @@ def q_abandoned_carts_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_average_order_value_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 (snowflake_refresh.py:58-67): SUM(price)/COUNT(DISTINCT key) per day."""
-    return (
-        catalog.events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("event_date"))
-        .agg(
-            F.round(_money_sum("value") / F.countDistinct("user_id"), 2).alias(
-                "average_order_value"
-            )
-        )
-    )
+    return aggregates.average_order_value_daily(catalog.events(spark, sf_dir))
 
 
 @register(
@@ -247,11 +227,7 @@ def q_average_order_value_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 (snowflake_refresh.py:69-79): distinct users per (day, type)."""
-    return (
-        catalog.events(spark, sf_dir)
-        .groupBy(F.date_trunc("day", "ts").alias("event_date"), "event_type")
-        .agg(F.countDistinct("user_id").alias("daily_active_users"))
-    )
+    return aggregates.daily_active_users_by_event_type(catalog.events(spark, sf_dir))
 
 
 @register(
@@ -259,7 +235,7 @@ def q_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT category, revenue FROM (
       SELECT json_extract_string(props, '$.k') AS category,
-             ROUND({_SQL_MONEY_SUM.format(col='value')}, 2) AS revenue
+             ROUND({aggregates.SQL_MONEY_SUM.format(col='value')}, 2) AS revenue
       FROM events
       WHERE event_type = 'purchase' AND json_extract_string(props, '$.k') IS NOT NULL
       GROUP BY json_extract_string(props, '$.k')
@@ -274,14 +250,8 @@ def q_top_revenue_by_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     get_json_object is a codegen'd JVM expression — no UDF. orderBy+limit
     fuses to TakeOrderedAndProject (per-partition K-heaps, no global sort).
     """
-    cat = F.get_json_object(F.col("props"), "$.k")
-    return (
-        catalog.events(spark, sf_dir)
-        .filter((F.col("event_type") == "purchase") & cat.isNotNull())
-        .groupBy(cat.alias("category"))
-        .agg(F.round(_money_sum("value"), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("category"))
-        .limit(15)
+    return aggregates.top_revenue_by_category(
+        catalog.events(spark, sf_dir), category_col=F.get_json_object("props", "$.k")
     )
 
 

@@ -1240,58 +1240,60 @@ def q_props_schema_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRANSITION_ORACLE = """
-    WITH seq AS (
-      SELECT user_id, event_type AS from_type,
-             LEAD(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS to_type
+@register(
+    "event_transition_matrix",
+    """
+    WITH s AS (
+      SELECT user_id, event_type, ts, event_id,
+             lead(event_type) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id) AS next_type
       FROM events
     ),
-    cnt AS (
-      SELECT from_type, to_type, COUNT(*) AS n_transitions
-      FROM seq WHERE to_type IS NOT NULL
-      GROUP BY from_type, to_type
+    t AS (
+      SELECT event_type AS from_type, next_type AS to_type,
+             COUNT(*) AS n
+      FROM s WHERE next_type IS NOT NULL
+      GROUP BY 1, 2
     )
-    SELECT from_type, to_type, n_transitions,
-           ROUND(CAST(n_transitions AS DOUBLE)
-                 / SUM(n_transitions) OVER (PARTITION BY from_type), 6) AS p
-    FROM cnt
-    ORDER BY from_type, to_type
-"""
-
-
-@register("event_transition_matrix", _TRANSITION_ORACLE)
+    SELECT from_type, to_type, CAST(n AS BIGINT) AS n_transitions,
+           CAST(n * 1000000 // SUM(n) OVER (PARTITION BY from_type)
+                AS BIGINT) AS p_ppm
+    FROM t
+    """,
+)
 def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-journey Markov transition matrix: per-user event sequences
-    (ts, event_id tiebreak) → lead() pairs → global (from, to) counts
-    and row-normalized probabilities. One per-user window (bounded by
-    a user's own history) + one 25-cell aggregate — the partition-by-
-    entity discipline that keeps sequence analytics linear at scale.
-    Probability is an integer ratio divided once in double —
-    bit-equal across engines."""
-    from pyspark.sql.window import Window
+    """First-order Markov transition matrix over per-user event
+    sequences: P(next event type | current), exact floored ppm — the
+    behavioral fingerprint behind session simulation and bot
+    detection. One user-keyed exchange for the lead window (ts +
+    event_id total order), one hash aggregate on the |types|² key,
+    then the row-normalization window runs on the tiny matrix itself."""
+    from pyspark.sql import Window as W
 
-    seq = catalog.events(spark, sf_dir).select(
+    ev = catalog.events(spark, sf_dir)
+    s = ev.select(
         "user_id",
-        F.col("event_type").alias("from_type"),
+        "event_type",
         F.lead("event_type")
-        .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
-        .alias("to_type"),
+        .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
+        .alias("next_type"),
     )
-    cnt = (
-        seq.filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count("*").alias("n_transitions"))
+    t = (
+        s.filter(F.col("next_type").isNotNull())
+        .groupBy(
+            F.col("event_type").alias("from_type"),
+            F.col("next_type").alias("to_type"),
+        )
+        .agg(F.count("*").alias("n"))
     )
-    w = Window.partitionBy("from_type")
-    return cnt.select(
+    return t.select(
         "from_type",
         "to_type",
-        "n_transitions",
-        F.round(
-            F.col("n_transitions").cast("double") / F.sum("n_transitions").over(w), 6
-        ).alias("p"),
-    ).orderBy("from_type", "to_type")
+        F.col("n").cast("long").alias("n_transitions"),
+        F.expr(
+            "n * 1000000 div sum(n) OVER (PARTITION BY from_type)"
+        ).cast("long").alias("p_ppm"),
+    )
 
 
 _EXPECTATIONS_ORACLE = """
@@ -3418,63 +3420,6 @@ def q_brand_price_quantity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when((vx <= 0) | (vy <= 0), F.lit(None))
         .otherwise(F.round(num / (F.sqrt(vx) * F.sqrt(vy)), 6))
         .alias("corr_qty_price"),
-    )
-
-
-@register(
-    "event_transition_matrix",
-    """
-    WITH s AS (
-      SELECT user_id, event_type, ts, event_id,
-             lead(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-      FROM events
-    ),
-    t AS (
-      SELECT event_type AS from_type, next_type AS to_type,
-             COUNT(*) AS n
-      FROM s WHERE next_type IS NOT NULL
-      GROUP BY 1, 2
-    )
-    SELECT from_type, to_type, CAST(n AS BIGINT) AS n_transitions,
-           CAST(n * 1000000 // SUM(n) OVER (PARTITION BY from_type)
-                AS BIGINT) AS p_ppm
-    FROM t
-    """,
-)
-def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences: P(next event type | current), exact floored ppm — the
-    behavioral fingerprint behind session simulation and bot
-    detection. One user-keyed exchange for the lead window (ts +
-    event_id total order), one hash aggregate on the |types|² key,
-    then the row-normalization window runs on the tiny matrix itself."""
-    from pyspark.sql import Window as W
-
-    ev = catalog.events(spark, sf_dir)
-    s = ev.select(
-        "user_id",
-        "event_type",
-        F.lead("event_type")
-        .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
-        .alias("next_type"),
-    )
-    t = (
-        s.filter(F.col("next_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("from_type"),
-            F.col("next_type").alias("to_type"),
-        )
-        .agg(F.count("*").alias("n"))
-    )
-    wrow = W.partitionBy("from_type")
-    return t.select(
-        "from_type",
-        "to_type",
-        F.col("n").cast("long").alias("n_transitions"),
-        F.expr(
-            "n * 1000000 div sum(n) OVER (PARTITION BY from_type)"
-        ).cast("long").alias("p_ppm"),
     )
 
 

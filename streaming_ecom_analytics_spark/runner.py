@@ -50,11 +50,9 @@ REPORTING_VIEWS: dict[str, Callable[[DataFrame], DataFrame]] = {
     "daily_revenue": lambda ev: aggregates.daily_revenue(
         ev, ts_col="event_time", price_col="price"
     ),
-    "top_selling_brands": lambda ev: aggregates.top_selling_brands(
-        ev, brand_col="brand", price_col="price"
-    ),
-    "conversion_funnel": lambda ev: aggregates.conversion_funnel(ev),
-    "abandoned_cart_users": lambda ev: aggregates.abandoned_cart_users(ev),
+    "top_selling_brands": aggregates.top_selling_brands,
+    "conversion_funnel": aggregates.conversion_funnel,
+    "abandoned_cart_users": aggregates.abandoned_cart_users,
     "average_order_value_daily": lambda ev: aggregates.average_order_value_daily(
         ev, ts_col="event_time", price_col="price", order_key_col="user_session"
     ),

@@ -43,6 +43,22 @@ _WIRE_FIELDS = (
     "user_session",
 )
 
+# The read side's from_json schema: the declared event schema with
+# event_time still a string, so the producer's regex gate can run on it
+# before the timestamp cast.
+_WIRE_SCHEMA = T.StructType(
+    [
+        T.StructField("event_time", T.StringType(), True),
+        *[f for f in ECOM_EVENT_SCHEMA.fields if f.name != "event_time"],
+    ]
+)
+# decode_events_with_dlq's: PERMISSIVE from_json yields an all-null
+# struct (not NULL) for malformed input; the corrupt-record column is the
+# supported way to see the failure AND keep the bytes.
+_DLQ_SCHEMA = T.StructType(
+    [*_WIRE_SCHEMA.fields, T.StructField("_corrupt_record", T.StringType(), True)]
+)
+
 
 def serialize_events(
     events: DataFrame,
@@ -68,13 +84,7 @@ def serialize_events(
     )
 
 
-def parse_events(
-    raw: DataFrame,
-    *,
-    value_col: str = "value",
-    schema: T.StructType | None = None,
-    validate: bool = True,
-) -> DataFrame:
+def parse_events(raw: DataFrame) -> DataFrame:
     """Kafka-shaped frame → typed events.
 
     from_json with the declared schema (never inference — a 100 TB
@@ -82,18 +92,12 @@ def parse_events(
     timestamp gate (producer.py:18-20) as a pushed-down rlike filter.
     Unparseable JSON yields nulls, dropped by the gate.
     """
-    wire_schema = T.StructType(
-        [
-            T.StructField("event_time", T.StringType(), True),
-            *[f for f in (schema or ECOM_EVENT_SCHEMA).fields if f.name != "event_time"],
-        ]
-    )
     parsed = raw.select(
-        F.from_json(F.col(value_col).cast("string"), wire_schema).alias("e")
+        F.from_json(F.col("value").cast("string"), _WIRE_SCHEMA).alias("e")
     ).select("e.*")
-    if validate:
-        parsed = parsed.filter(F.col("event_time").rlike(EVENT_TIME_PATTERN))
-    return parsed.withColumn("event_time", F.to_timestamp("event_time"))
+    return parsed.filter(F.col("event_time").rlike(EVENT_TIME_PATTERN)).withColumn(
+        "event_time", F.to_timestamp("event_time")
+    )
 
 
 def serialize_events_avro(events: DataFrame, *, key_col: str = "user_id") -> DataFrame:
@@ -162,13 +166,8 @@ def kafka_sink(
     return writer.start()
 
 
-def decode_events_with_dlq(
-    raw: DataFrame,
-    *,
-    value_col: str = "value",
-    schema: T.StructType | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """decode_events, but nothing is dropped silently: returns
+def decode_events_with_dlq(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """parse_events, but nothing is dropped silently: returns
     ``(events, rejects)`` where rejects carries the ORIGINAL payload of
     every row that failed JSON parsing or the producer's timestamp
     gate, tagged with the reason — the ingest-side dead-letter queue
@@ -178,26 +177,12 @@ def decode_events_with_dlq(
     byte-for-byte for replay after a producer fix. At 100 TB the DLQ
     write is append-only parquet partitioned by reject_reason.
     """
-    wire_schema = T.StructType(
-        [
-            T.StructField("event_time", T.StringType(), True),
-            *[
-                f
-                for f in (schema or ECOM_EVENT_SCHEMA).fields
-                if f.name != "event_time"
-            ],
-            # PERMISSIVE from_json yields an all-null struct (not NULL)
-            # for malformed input; the corrupt-record column is the
-            # supported way to see the failure AND keep the bytes.
-            T.StructField("_corrupt_record", T.StringType(), True),
-        ]
-    )
-    payload = F.col(value_col).cast("string")
+    payload = F.col("value").cast("string")
     tagged = raw.select(
         payload.alias("__raw"),
         F.from_json(
             payload,
-            wire_schema,
+            _DLQ_SCHEMA,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
         ).alias("e"),
     ).withColumn(

@@ -75,3 +75,15 @@ def test_driver_contract_stays_one_to_one_with_registry():
     # the registry, never of artifact files on disk
     assert list(qs) == list(REGISTRY)
     assert list(oracles) == [n for n in REGISTRY if REGISTRY[n].oracle is not None]
+
+
+def test_register_refuses_a_name_it_already_holds():
+    """A second registration under a held name used to replace the first
+    silently; it must raise before touching the registry."""
+    from streaming_ecom_analytics_spark.plans.registry import register
+
+    before = dict(REGISTRY)
+    with pytest.raises(ValueError, match="daily_revenue"):
+        register("daily_revenue", None)(lambda spark, sf_dir: None)
+    assert list(REGISTRY) == list(before)
+    assert all(REGISTRY[n] is rq for n, rq in before.items())

@@ -3,10 +3,12 @@ a crafted ecom CSV: extract → publish → validate → materialize."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from streaming_ecom_analytics_spark.runner import REPORTING_VIEWS, run_batch_cycle
+from streaming_ecom_analytics_spark.schema import ECOM_EVENT_LAKE_SCHEMA
 from streaming_ecom_analytics_spark.sources.lake import Lake
 
 CSV_HEADER = "event_time,event_type,product_id,category_id,category_code,brand,price,user_id,user_session"
@@ -81,6 +83,32 @@ def test_aov_uses_sessions(cycle):
     }
     # day 1: one purchase session s1 → 9.99; day 2: s3 → 40.0
     assert out == {"2019-11-01": 9.99, "2019-11-02": 40.0}
+
+
+def test_daily_revenue_follows_the_oracle_money_rule(spark, tmp_path):
+    # each price is cast to DECIMAL(18,2) before the sum: 0.13 + 0.13 =
+    # 0.26, where a float sum gives round(0.25, 2) = 0.25
+    rows = [
+        "2019-11-03 09:00:00,purchase,201,c1,electronics.phone,acme,0.125,u5,s5",
+        "2019-11-03 09:10:00,purchase,202,c1,electronics.phone,acme,0.125,u6,s6",
+    ]
+    lake, _ = _cycle_on(spark, tmp_path, rows)
+    got = [r.total_revenue for r in lake.read(spark, "reporting", "daily_revenue").collect()]
+    want = duckdb.sql(
+        "SELECT ROUND(CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE), 2) "
+        f"FROM read_parquet('{tmp_path}/warehouse/raw/events/*/*.parquet')"
+    ).fetchone()[0]
+    assert got == [want] == [0.26]
+
+
+def test_no_reporting_view_sorts_its_whole_table(cycle):
+    # a refresh is a parquet overwrite with no row order to keep; only
+    # top-K may order (TakeOrderedAndProject, no range shuffle)
+    spark, lake, _ = cycle
+    events = lake.read(spark, "raw", "events", schema=ECOM_EVENT_LAKE_SCHEMA)
+    for name, build in REPORTING_VIEWS.items():
+        plan = build(events)._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan, name
 
 
 def test_header_only_csv_is_an_empty_cycle(spark, tmp_path):
