@@ -160,16 +160,10 @@ def plan_fingerprint(plan: str) -> dict:
     Round 12 (round-11 verdict #5): subtree membership is decided by
     STRUCTURAL tree depth (the branch-glyph column, ``_structural_col``)
     instead of the node name's column, which codegen stars shifted —
-    the mis-tagging that inverted split_leakage_audit's counters. The
-    md5 therefore re-tags for every cached consumer; ``hash_legacy``
-    keeps the round-11 tagging so r11→r12 plan-change diffs can still
-    use a stable key (tool-level hash moves vs real plan moves stay
-    distinguishable)."""
+    the mis-tagging that inverted split_leakage_audit's counters."""
     nodes: list[str] = []
-    legacy_nodes: list[str] = []
     n_global_windows = 0
     cache_col: int | None = None  # structural depth of the open InMemoryRelation
-    legacy_cache_col: int | None = None  # round-11 name-column tagging
     for raw in plan.splitlines():
         # Materialized-AQE caches print "== Final Plan ==" / "== Initial
         # Plan ==" sections whose content indentation RESTARTS relative
@@ -192,12 +186,6 @@ def plan_fingerprint(plan: str) -> dict:
         in_cache = cache_col is not None
         if kind == "InMemoryRelation" and cache_col is None:
             cache_col = col  # deeper lines are the cache's build plan
-        lcol = m.start(1)
-        if legacy_cache_col is not None and lcol <= legacy_cache_col:
-            legacy_cache_col = None
-        legacy_in_cache = legacy_cache_col is not None
-        if kind == "InMemoryRelation" and legacy_cache_col is None:
-            legacy_cache_col = lcol
         if kind == "Window" and _is_global_window(raw):
             # counted whether or not it sits in a cache-build subtree:
             # a one-partition funnel runs either way
@@ -219,13 +207,11 @@ def plan_fingerprint(plan: str) -> dict:
             fmt = re.search(r"FileScan (\w+)", raw)
             tag += ":" + (fmt.group(1) if fmt else "?")
         nodes.append(("cache:" if in_cache else "") + tag)
-        legacy_nodes.append(("cache:" if legacy_in_cache else "") + tag)
     canonical = "\n".join(nodes)
     main = [n for n in nodes if not n.startswith("cache:")]
     cache = [n[len("cache:"):] for n in nodes if n.startswith("cache:")]
     return {
         "hash": hashlib.md5(canonical.encode()).hexdigest()[:16],
-        "hash_legacy": hashlib.md5("\n".join(legacy_nodes).encode()).hexdigest()[:16],
         "n_nodes": len(nodes),
         "n_exchanges": sum(n.startswith("Exchange") for n in main),
         "n_cache_build_exchanges": sum(n.startswith("Exchange") for n in cache),
@@ -243,18 +229,28 @@ def plan_fingerprint(plan: str) -> dict:
     }
 
 
+def query_fingerprint(spark, name: str, sf_dir: str) -> dict:
+    """Fingerprint one registered query's executed plan, built with no
+    cache left by an earlier query. A family-shared subtree prints
+    differently once a sibling consumer has materialized it, so shared
+    subtrees are released with the tracked caches before the build:
+    every query is dumped with its shared subtrees unbuilt, whatever
+    ran before it."""
+    from streaming_ecom_analytics_spark.caching import release_shared, release_tracked
+    from streaming_ecom_analytics_spark.plans import REGISTRY
+
+    release_tracked()
+    release_shared()
+    df = REGISTRY[name].fn(spark, sf_dir)
+    return plan_fingerprint(df._jdf.queryExecution().executedPlan().toString())
+
+
 def dump_hashes(sf_dir: str) -> int:
-    from streaming_ecom_analytics_spark.caching import release_tracked
     from streaming_ecom_analytics_spark.plans import REGISTRY
     from streaming_ecom_analytics_spark.session import get_spark
 
     spark = get_spark(app_name="plan_hashes")
-    out: dict[str, dict] = {}
-    for name in sorted(REGISTRY):
-        df = REGISTRY[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        release_tracked()
-        out[name] = plan_fingerprint(plan)
+    out = {name: query_fingerprint(spark, name, sf_dir) for name in sorted(REGISTRY)}
     json.dump({"sf_dir": sf_dir, "plans": out}, sys.stdout, indent=1)
     sys.stdout.write("\n")
     return 0

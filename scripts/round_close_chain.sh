@@ -32,10 +32,13 @@ to_artifact "PLANSHASH_${R}.json" python3 scripts/dump_plans.py --hashes \
   2>/tmp/planshash_${R}.err
 echo "PLANSHASH rc=$?"
 
-python3 scripts/driver_sim.py /root/testdata/sf0.01 \
-  --emit-json "PARITY_${R}.json.tmp" > /tmp/parity_${R}.log 2>&1
-settle "PARITY_${R}.json" $?
-echo "PARITY rc=$?"
+# parity at every shipped scale factor, one artifact per SF
+for SF in 0.001 0.01 0.1; do
+  python3 scripts/driver_sim.py "/root/testdata/sf${SF}" \
+    --emit-json "PARITY_${R}_sf${SF}.json.tmp" > "/tmp/parity_${R}_sf${SF}.log" 2>&1
+  settle "PARITY_${R}_sf${SF}.json" $?
+  echo "PARITY sf${SF} rc=$?"
+done
 
 to_artifact "RECALL_${R}.json" python3 scripts/recall_report.py --deep \
   2>/tmp/recall_${R}.err

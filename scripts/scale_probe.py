@@ -13,24 +13,33 @@ exponent = log(t_probe / t_sf01) / log(scale)
 
 Method: one untimed warmup pass at sf0.001 (JIT/codegen), then
 ``runs`` timed passes per scale, per-query MEDIAN, noop sink — the
-same protocol as bench.py so numbers are comparable.
+same protocol as bench.py so numbers are comparable. Each query runs
+under its own job group; its shuffle and spill bytes are read from the
+in-process status store through ``perfbench/spans.SparkJobs`` (the
+reader the benchmark's traced runs use), and its AQE-final join nodes
+from the SQL status store. Both work with the UI off.
 
 Usage:
     python scripts/gen_scale_probe.py                 # once
     python scripts/scale_probe.py > SCALEPROBE_r7.json
-Env: SPARK_GRAFT_PROBE_RUNS (default 3), SPARK_GRAFT_PROBE_DIR.
+Env: SPARK_GRAFT_PROBE_RUNS (default 3), SPARK_GRAFT_PROBE_SCALES.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "perfbench"))
+
+from spans import SparkJobs  # noqa: E402
 
 from streaming_ecom_analytics_spark.caching import (  # noqa: E402
     release_shared,
@@ -102,7 +111,7 @@ PROBE_QUERIES = [
 # sf10_probe:/root/repo/scale_probe/sf10:100" python scripts/scale_probe.py
 _DEFAULT_SCALES = [
     ("sf0.1", "/root/testdata/sf0.1", 1.0),
-    ("sf1_probe", os.environ.get("SPARK_GRAFT_PROBE_DIR", str(REPO / "scale_probe" / "sf1")), 10.0),
+    ("sf1_probe", str(REPO / "scale_probe" / "sf1"), 10.0),
 ]
 _env_scales = os.environ.get("SPARK_GRAFT_PROBE_SCALES")
 SCALES = (
@@ -114,43 +123,6 @@ SCALES = (
     else _DEFAULT_SCALES
 )
 
-
-def median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-
-
-_UI_PORT = int(os.environ.get("SPARK_GRAFT_PROBE_UI_PORT", "4049"))
-
-
-def _metrics_snapshot() -> dict[str, int] | None:
-    """Cumulative shuffle/spill bytes across all completed stages, via
-    the Spark status REST API (round-7 verdict #3: wall time can't see
-    a spill — the 100x decade is where memory cliffs live). Returns
-    None when the UI isn't up; callers diff two snapshots around a
-    query run. Stage retention is raised so the cumulative sums never
-    go backwards mid-probe."""
-    import urllib.request
-
-    base = f"http://localhost:{_UI_PORT}/api/v1"
-    try:
-        with urllib.request.urlopen(f"{base}/applications", timeout=5) as r:
-            app_id = json.load(r)[0]["id"]
-        with urllib.request.urlopen(
-            f"{base}/applications/{app_id}/stages?status=complete", timeout=15
-        ) as r:
-            stages = json.load(r)
-    except Exception:
-        return None
-    return {
-        "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        "shuffle_read_bytes": sum(s.get("shuffleReadBytes", 0) for s in stages),
-        "memory_spill_bytes": sum(s.get("memoryBytesSpilled", 0) for s in stages),
-        "disk_spill_bytes": sum(s.get("diskBytesSpilled", 0) for s in stages),
-    }
-
-
 _JOIN_NODES = (
     "BroadcastHashJoin",
     "SortMergeJoin",
@@ -160,68 +132,74 @@ _JOIN_NODES = (
 )
 
 
-def _join_strategy_snapshot() -> dict[str, int] | None:
-    """Cumulative physical-join-node counts across all SQL executions,
-    from the status REST API's SQL endpoint (round-8 verdict #5: a
-    broadcast→SMJ strategy flip between decades was adjudicated in
-    SCALE.md prose; recording per-decade strategy counts makes a flip
-    a data point, not an interpretation). For AQE plans the node graph
-    reflects the FINAL adaptively-chosen plan, so a runtime flip is
-    visible here even when the static plan is identical across scales.
-    Callers diff two snapshots around a query run."""
-    import urllib.request
+def _newest_execution_id(sql_store) -> int:
+    it = sql_store.executionsList().reverseIterator()
+    return it.next().executionId() if it.hasNext() else -1
 
-    base = f"http://localhost:{_UI_PORT}/api/v1"
-    try:
-        with urllib.request.urlopen(f"{base}/applications", timeout=5) as r:
-            app_id = json.load(r)[0]["id"]
-        with urllib.request.urlopen(
-            f"{base}/applications/{app_id}/sql"
-            "?details=true&planDescription=false&offset=0&length=1000000",
-            timeout=15,
-        ) as r:
-            execs = json.load(r)
-    except Exception:
-        return None
+
+def _join_counts(sql_store, after_id: int) -> dict[str, int]:
+    """Physical-join-node counts over the SQL executions newer than
+    ``after_id``. For AQE plans the stored node graph is the FINAL
+    adaptively-chosen plan, so a broadcast→SMJ flip between decades is
+    a data point even when the static plan is identical across scales."""
     counts = dict.fromkeys(_JOIN_NODES, 0)
-    for e in execs:
-        for node in e.get("nodes", []):
-            nm = node.get("nodeName", "")
+    execs = sql_store.executionsList().reverseIterator()
+    while execs.hasNext():
+        eid = execs.next().executionId()
+        if eid <= after_id:
+            break
+        nodes = sql_store.planGraph(eid).allNodes().iterator()
+        while nodes.hasNext():
+            nm = nodes.next().name()
             for j in _JOIN_NODES:
                 if nm.startswith(j):
                     counts[j] += 1
                     break
-    return counts
+    return {k: v for k, v in counts.items() if v}
 
 
-def _drain_listener_bus(spark) -> None:
-    """Make the status store consistent with the just-finished action
-    before snapshotting (the AppStatus listener is async)."""
+def measure(spark, jobs: SparkJobs, name: str, sf_dir: str, group: str) -> dict:
+    """Run one registered query into the noop sink under job group
+    ``group``. Returns its wall seconds (``sec``), the shuffle-write and
+    spill MB of the group's stages, and the join-node counts of the SQL
+    executions it started (``joins``). A query that raises returns
+    ``guard`` instead: a brute-force guard refusing an out-of-contract
+    scale is a result (the guard working), not a crash."""
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    after_id = _newest_execution_id(sql_store)
+    jobs.label(group)
+    t0 = time.perf_counter()
     try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    except Exception:
-        time.sleep(0.5)
+        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    except Exception as exc:
+        return {"guard": f"{type(exc).__name__}: " + str(exc).splitlines()[0][:160]}
+    sec = time.perf_counter() - t0
+    stages = jobs.collect(group)  # drains the listener bus first
+    return {
+        "sec": sec,
+        "shuffle_write_mb": stages["shuffle_write_mb"],
+        "spill_mb": stages["spill_mb"],
+        "joins": _join_counts(sql_store, after_id),
+    }
+
+
+def _slope(pts: list[tuple[float, float]]) -> float | None:
+    """OLS slope of y on x, or None below two points."""
+    if len(pts) < 2:
+        return None
+    n = len(pts)
+    sx = sum(x for x, _ in pts)
+    sy = sum(y for _, y in pts)
+    sxy = sum(x * y for x, y in pts)
+    sxx = sum(x * x for x, _ in pts)
+    return round((n * sxy - sx * sy) / (n * sxx - sx * sx), 3)
 
 
 def main() -> int:
-    import math
-
     runs = max(1, int(os.environ.get("SPARK_GRAFT_PROBE_RUNS", "3")))
-    spark = get_spark(
-        app_name="scale_probe",
-        extra_conf={
-            # status REST API for shuffle/spill telemetry; retention
-            # high enough that cumulative stage sums are monotonic
-            # across the whole probe
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(_UI_PORT),
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-            # SQL executions feed the join-strategy counts; retention
-            # must outlast the whole probe for cumulative diffs
-            "spark.sql.ui.retainedExecutions": "100000",
-        },
-    )
+    spark = get_spark(app_name="scale_probe")
+    jobs = SparkJobs(spark)
 
     from streaming_ecom_analytics_spark.hostprobe import host_fixture
 
@@ -253,110 +231,57 @@ def main() -> int:
 
     timings: dict[str, dict[str, float]] = {n: {} for n in PROBE_QUERIES}
     guards: dict[str, dict[str, str]] = {n: {} for n in PROBE_QUERIES}
-    shuffles: dict[str, dict[str, dict[str, int]]] = {n: {} for n in PROBE_QUERIES}
-    joins: dict[str, dict[str, dict[str, int]]] = {n: {} for n in PROBE_QUERIES}
+    # status-store metrics of each query's first run
+    metrics: dict[str, dict[str, dict]] = {n: {} for n in PROBE_QUERIES}
     for label, sf_dir, _scale in SCALES:
         host_stamps[label] = host_fixture(spark)
         print(f"scale_probe: {label} host fixture {host_stamps[label]}", file=sys.stderr)
         samples: dict[str, list[float]] = {n: [] for n in PROBE_QUERIES}
         for run_i in range(runs):
             for name in PROBE_QUERIES:
-                want_metrics = run_i == 0  # shuffle volume is deterministic
-                before = _metrics_snapshot() if want_metrics else None
-                jbefore = _join_strategy_snapshot() if want_metrics else None
-                t0 = time.perf_counter()
-                try:
-                    REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    samples[name].append(time.perf_counter() - t0)
-                except Exception as exc:
-                    # a brute-force guard refusing an out-of-contract
-                    # scale IS a result (the guard working), not a crash
-                    guards[name][label] = f"{type(exc).__name__}: " + str(
-                        exc
-                    ).splitlines()[0][:160]
-                    before = jbefore = None
-                if before is not None:
-                    _drain_listener_bus(spark)
-                    after = _metrics_snapshot()
-                    if after is not None:
-                        shuffles[name][label] = {
-                            k: after[k] - before[k] for k in after
-                        }
-                if jbefore is not None:
-                    jafter = _join_strategy_snapshot()
-                    if jafter is not None:
-                        delta = {
-                            k: jafter[k] - jbefore[k]
-                            for k in jafter
-                            if jafter[k] - jbefore[k] > 0
-                        }
-                        if delta:
-                            joins[name][label] = delta
+                m = measure(spark, jobs, name, sf_dir, f"scale_probe:{label}:{name}:{run_i}")
+                if "guard" in m:
+                    guards[name][label] = m["guard"]
+                else:
+                    samples[name].append(m["sec"])
+                    if run_i == 0:
+                        metrics[name][label] = m
                 release_tracked()
             # shared family subtrees are per-(sf_dir) keyed; release per
             # pass so each pass pays each shared build exactly once
             release_shared()
         for name, xs in samples.items():
             if xs:
-                timings[name][label] = round(median(xs), 3)
+                timings[name][label] = round(statistics.median(xs), 3)
 
     out = {}
     for name, t in timings.items():
         row: dict = {f"{lab}_sec": t[lab] for lab, _d, _s in SCALES if lab in t}
-        # OLS slope of log(t) on log(scale) over every measured point
-        pts = [
-            (math.log(s), math.log(t[lab]))
-            for lab, _d, s in SCALES
-            if lab in t
-        ]
-        if len(pts) >= 2:
-            n = len(pts)
-            sx = sum(x for x, _ in pts)
-            sy = sum(y for _, y in pts)
-            sxy = sum(x * y for x, y in pts)
-            sxx = sum(x * x for x, _ in pts)
-            row["exponent"] = round(
-                (n * sxy - sx * sy) / (n * sxx - sx * sx), 3
-            )
+        # slope of log(t) on log(scale) over every measured point
+        exponent = _slope([(math.log(s), math.log(t[lab])) for lab, _d, s in SCALES if lab in t])
+        if exponent is not None:
+            row["exponent"] = exponent
+        ms = metrics[name]
         for lab, _d, _s in SCALES:
-            if lab in shuffles[name]:
-                m = shuffles[name][lab]
-                row[f"{lab}_shuffle_write_mb"] = round(
-                    m["shuffle_write_bytes"] / 1e6, 2
-                )
-                row[f"{lab}_spill_mb"] = round(
-                    (m["memory_spill_bytes"] + m["disk_spill_bytes"]) / 1e6, 2
-                )
+            if lab in ms:
+                row[f"{lab}_shuffle_write_mb"] = round(ms[lab]["shuffle_write_mb"], 2)
+                row[f"{lab}_spill_mb"] = round(ms[lab]["spill_mb"], 2)
         # shuffle-volume scaling exponent: a query whose shuffle grows
         # super-linearly while wall time doesn't is a hidden cliff.
         # Suppressed when every measured volume is <5 MB — a ratio of
         # two near-zero numbers (a broadcast-only plan's residual bytes)
         # is noise, not a scaling signal.
-        spts = [
-            (math.log(s), math.log(shuffles[name][lab]["shuffle_write_bytes"]))
-            for lab, _d, s in SCALES
-            if lab in shuffles[name]
-            and shuffles[name][lab]["shuffle_write_bytes"] > 0
-        ]
-        if max(
-            (shuffles[name][lab]["shuffle_write_bytes"] for lab in shuffles[name]),
-            default=0,
-        ) < 5_000_000:
-            spts = []
-        if len(spts) >= 2:
-            n = len(spts)
-            sx = sum(x for x, _ in spts)
-            sy = sum(y for _, y in spts)
-            sxy = sum(x * y for x, y in spts)
-            sxx = sum(x * x for x, _ in spts)
-            row["shuffle_exponent"] = round(
-                (n * sxy - sx * sy) / (n * sxx - sx * sx), 3
-            )
+        if max((m["shuffle_write_mb"] for m in ms.values()), default=0) >= 5:
+            shuffle_exponent = _slope([
+                (math.log(s), math.log(ms[lab]["shuffle_write_mb"]))
+                for lab, _d, s in SCALES
+                if lab in ms and ms[lab]["shuffle_write_mb"] > 0
+            ])
+            if shuffle_exponent is not None:
+                row["shuffle_exponent"] = shuffle_exponent
         for lab, _d, _s in SCALES:
-            if lab in joins[name]:
-                row[f"{lab}_join_strategies"] = joins[name][lab]
+            if lab in ms and ms[lab]["joins"]:
+                row[f"{lab}_join_strategies"] = ms[lab]["joins"]
         if guards[name]:
             row["guard_fired"] = guards[name]
         out[name] = row
@@ -364,7 +289,7 @@ def main() -> int:
         "probe": "row-count scale probe (gen_scale_probe.py seed 7)",
         "scales": {lab: s for lab, _d, s in SCALES},
         "runs_per_scale": runs,
-        "aggregation": "median (timings); first-run diff of the status REST API's completed-stage totals (shuffle/spill) and SQL-graph join-node counts (join strategies, AQE-final)",
+        "aggregation": "median (timings); first run's status-store totals for the query's job group (shuffle/spill) and join nodes of its SQL executions' plan graphs (join strategies, AQE-final)",
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
         # pinned BLAS-GEMM + JVM-codegen throughput measured at the
         # START of each decade's timed block (hostprobe.py): exponents

@@ -456,8 +456,8 @@ def embedding_near_dup_pairs(
       that both members of a boundary pair share one of m lists falls
       as n_lists grows linearly with the corpus (round-8 verdict #1:
       fixed m=4 measured pair recall 1.0/0.71/0.30 at sf0.1/10x/100x;
-      the auto schedule measures 1.0/0.99/0.92 — tuning run in
-      scripts/_ivf_recall_experiment.py). Gram compute grows as
+      the auto schedule measures 1.0/0.99/0.92 — recorded in
+      RECALL_r9.json). Gram compute grows as
       n·occ·m² = n·occ·log²(n/occ) — linear with a polylog factor.
       ``ivf_max_list_rows`` (default 65_536, None disables) is the
       skew guard: list sizing targets AVERAGE occupancy, but duplicate-
@@ -768,7 +768,7 @@ def _ivf_auto_n_assign(n_lists: int) -> int:
     with log2 of the list count so pair recall holds decade-over-decade
     (round-8 verdict #1 — fixed m=4 measured 1.0/0.71/0.30 at
     sf0.1/10x/100x; this schedule measures 1.0/0.99/0.92 on the same
-    corpora, tuning grid in scripts/_ivf_recall_experiment.py). The
+    corpora, recorded in RECALL_r9.json). The
     floor 4 keeps tiny corpora at full pigeonhole recall; the cap 32
     bounds the worst-case Gram blow-up at m²=1024× a single-assignment
     pass — reached only past ~2^21 lists (≈550M rows at 256-row

@@ -5,7 +5,8 @@ types on a schemaless CSV read by explicit per-column expressions:
 timestamp parse, date derivation, string casts, identity null
 normalization on nullable columns, and price null→0.0 coalesce. The
 producer adds a regex timestamp gate (producer.py:18-20) applied
-row-at-a-time in the driver; here it is a pushed-down ``rlike`` filter.
+row-at-a-time in the driver; here it is a pushed-down ``rlike`` filter
+in ``sources/kafka_contract.parse_events``.
 
 Everything is a built-in column expression — whole-stage codegen'd,
 zero Python in the row path.
@@ -15,8 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from streaming_ecom_analytics_spark.schema import EVENT_TIME_PATTERN
 
 
 def clean_events(raw: DataFrame) -> DataFrame:
@@ -49,11 +48,3 @@ def clean_events(raw: DataFrame) -> DataFrame:
         F.col("user_session").cast("string").alias("user_session"),
     )
 
-
-def valid_timestamp_filter(df: DataFrame, ts_string_col: str) -> DataFrame:
-    """Keep rows whose serialized timestamp matches the producer contract.
-
-    Replaces the driver-side regex loop (producer.py:18-20,54) with a
-    codegen'd rlike predicate that Catalyst can place next to the scan.
-    """
-    return df.filter(F.col(ts_string_col).rlike(EVENT_TIME_PATTERN))

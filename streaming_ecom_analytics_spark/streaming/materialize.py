@@ -3,13 +3,13 @@
 The reference refreshes its reporting tables by TRUNCATE+INSERT per
 cycle with per-table error isolation (reference snowflake_refresh.py
 pattern, snowflake.py:49-63). The Spark-native equivalent is a
-``foreachBatch`` sink: each micro-batch atomically overwrites (or
-upserts into) the target parquet table — idempotent under micro-batch
+``foreachBatch`` sink: each micro-batch overwrites (or upserts into)
+the target parquet table — idempotent under micro-batch
 replay, which together with the checkpoint gives the exactly-once
 materialization the reference only approximates.
 
-At 100 TB the overwrite is partition-scoped (dynamic partition
-overwrite on the date key), not table-wide.
+The overwrite is table-wide: a complete-mode aggregate's batch frame
+is the whole view, so each refresh rewrites the whole target.
 """
 
 from __future__ import annotations
@@ -35,26 +35,6 @@ def overwrite_materializer(
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target_path)
-
-    return _write
-
-
-def partition_overwrite_materializer(
-    target_path: str,
-    *,
-    partition_col: str,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: dynamic partition overwrite — rewrites
-    only the date partitions present in the micro-batch (the scale-safe
-    refresh; a day's late data rewrites one partition, not the table)."""
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
 
     return _write
 

@@ -25,9 +25,12 @@ Design:
 - completed funnels emit one row (user, started_at, completed_at,
   seconds_to_convert) and reset — the operator's output stream is the
   conversion log;
-- state is bounded by a processing-time timeout: users idle longer
-  than ``timeout_minutes`` are evicted (emitting nothing), which is
-  what keeps 100 TB of users from accumulating state forever.
+- state is bounded by an event-time timeout under a watermark on
+  ``ts``: a user is evicted (emitting nothing) once the stream's event
+  time has moved ``timeout_minutes`` past their last event, which is
+  what keeps 100 TB of users from accumulating state forever. Event
+  time, not wall-clock time, so a bounded ``availableNow`` backfill
+  drains and stops.
 
 The same machine doubles as a batch operator — partition-wise
 ``mapInPandas`` over user-sorted partitions (no per-group pandas
@@ -117,14 +120,10 @@ def funnel_conversions_stateful(
     """Streaming ordered-funnel tracker. Input must be a streaming
     frame; output appends one row per completed funnel.
 
-    Termination note (round 12): ``ProcessingTimeTimeout`` registers
-    wall-clock timers, so Spark keeps the query alive firing EMPTY
-    micro-batches (~1/s) until the last timer's horizon — an
-    ``availableNow`` backfill therefore does NOT self-terminate within
-    ``timeout_minutes``. Bounded backfills should drain and stop
-    (``q.processAllAvailable(); q.stop()``); the timeout exists for the
-    continuous-ingest deployment, where expired users must be evicted
-    even if they never produce another event."""
+    The watermark on ``ts`` trails the newest event time seen by
+    ``timeout_minutes``. A user's state expires once the watermark
+    passes their last event; a user whose new events all lie behind
+    the watermark expires at its next advance."""
 
     def track(key, pdf_iter, state: GroupState):
         (user_id,) = key
@@ -133,13 +132,17 @@ def funnel_conversions_stateful(
             return
         stage, stage_ts, started = state.get if state.exists else (0, 0, 0)
         out = []
+        last_ms = 0
         for pdf in pdf_iter:
             convs, stage, stage_ts, started = _advance(
                 pdf, stage, stage_ts, started, stages
             )
             out.extend(convs)
+            last_ms = max(last_ms, int(pdf["ts"].max().value // 1_000_000))
         state.update((stage, stage_ts, started))
-        state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+        # the operator does not drop late rows, and a timeout may not
+        # lie behind the watermark
+        state.setTimeoutTimestamp(max(last_ms, state.getCurrentWatermarkMs()))
         if out:
             yield pd.DataFrame(
                 {
@@ -150,15 +153,17 @@ def funnel_conversions_stateful(
                 }
             )
 
-    renamed = events.filter(F.col("event_type").isin(list(stages))).selectExpr(
-        f"{user_col} AS user_id", f"{ts_col} AS ts", "event_type"
+    renamed = (
+        events.filter(F.col("event_type").isin(list(stages)))
+        .selectExpr(f"{user_col} AS user_id", f"{ts_col} AS ts", "event_type")
+        .withWatermark("ts", f"{timeout_minutes} minutes")
     )
     return renamed.groupBy("user_id").applyInPandasWithState(
         track,
         outputStructType=CONVERSION_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

@@ -1157,3 +1157,23 @@ def test_persist_tracked_is_idempotent(spark):
     assert a.storageLevel.useMemory
     caching.release_tracked()
     assert not df.storageLevel.useMemory
+
+
+def test_dumped_fingerprint_ignores_a_sibling_materializing_the_shared_subtree(spark):
+    """A family-shared subtree prints its AQE final plan once a sibling
+    consumer has run it. The dump routine must give one fingerprint per
+    query whatever state its shared subtrees were left in."""
+    import importlib.util
+    from pathlib import Path
+
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans", Path(__file__).resolve().parents[1] / "scripts" / "dump_plans.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    before = mod.query_fingerprint(spark, "near_dup_minhash_lsh", SF_DIR)
+    # dedup_clusters reads the same persisted LSH pair set and runs it
+    REGISTRY["dedup_clusters"].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    after = mod.query_fingerprint(spark, "near_dup_minhash_lsh", SF_DIR)
+    assert before == after

@@ -1,7 +1,8 @@
 """Determinism + distribution-fidelity tests for the scale-probe data
 generator (scripts/gen_scale_probe.py) — SCALEPROBE_r7.json is only
 meaningful if the probe data is exactly regenerable (seed 7) and
-actually mirrors the driver testdata's distributions."""
+actually mirrors the driver testdata's distributions — and for the
+probe's per-query telemetry (scripts/scale_probe.py)."""
 
 from __future__ import annotations
 
@@ -9,6 +10,8 @@ import importlib.util
 from pathlib import Path
 
 import numpy as np
+
+from .conftest import SF_DIR
 
 
 def _mod():
@@ -66,3 +69,25 @@ def test_generated_distributions_mirror_testdata_profile():
         c /= np.linalg.norm(c)
         pulls.append(float((v @ c).mean()))
     assert 0.03 < np.mean(pulls) < 0.15
+
+
+def test_probe_reads_query_telemetry_from_the_status_store(spark):
+    """scale_probe.measure reads shuffle/spill bytes through
+    perfbench/spans.SparkJobs and AQE-final join nodes from the SQL
+    status store, both in-process: the session keeps its UI off."""
+    spec = importlib.util.spec_from_file_location(
+        "scale_probe", Path(__file__).resolve().parents[1] / "scripts" / "scale_probe.py"
+    )
+    probe = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(probe)
+    try:
+        m = probe.measure(
+            spark, probe.SparkJobs(spark), "revenue_by_nation", SF_DIR, "scale_probe_test"
+        )
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    assert "guard" not in m
+    assert m["shuffle_write_mb"] > 0
+    assert m["spill_mb"] >= 0
+    assert sum(m["joins"].values()) >= 1, m["joins"]
+    assert spark.sparkContext.uiWebUrl is None

@@ -712,8 +712,8 @@ def test_ivf_auto_n_assign_schedule():
     decade-over-decade (m=4 measured pair recall 1.0/0.71/0.30 at
     sf0.1/10x/100x). The auto schedule m = max(4, ceil(1.5·log2(L)))
     must hold the measured floor at the probe decades (m=10 at 79
-    lists → 0.99, m=15 at 782 → 0.92 — scripts/_ivf_recall_experiment
-    grid) and stay bounded."""
+    lists → 0.99, m=15 at 782 → 0.92 — recorded in RECALL_r9.json)
+    and stay bounded."""
     from streaming_ecom_analytics_spark.functions.similarity import (
         _ivf_auto_n_assign,
     )

@@ -92,26 +92,47 @@ def test_streaming_funnel_with_cross_batch_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    # ProcessingTimeTimeout keeps the query alive firing empty timer
-    # micro-batches (~1/s) until the 60-min state timeout horizon, so
-    # availableNow never self-terminates here — awaitTermination(180)
-    # burned its FULL timeout every run, and processAllAvailable never
-    # quiesces either (every timer batch is new 'work'). Poll the sink
-    # for the expected conversion (lands with the 3rd source batch,
-    # seconds), then stop (round-12: 199 s → ~15 s; the operator
-    # docstring documents the drain-then-stop pattern for bounded
-    # backfills).
-    import time
-
-    deadline = time.time() + 120
-    rows = []
-    while time.time() < deadline:
-        rows = spark.sql("SELECT * FROM conv_out").collect()
-        if rows:
-            break
-        time.sleep(1)
-    q.stop()
+    # event-time timeout: the backfill drains and the query stops itself
+    q.awaitTermination()
+    rows = spark.sql("SELECT * FROM conv_out").collect()
     assert [(r.user_id, r.seconds_to_convert) for r in rows] == [(1, 300.0)]
+
+
+def test_streaming_funnel_event_time_timeout_evicts_and_tolerates_late_rows(spark, tmp_path):
+    """State expires on event time: once the watermark (newest event
+    minus the 60-minute timeout) passes a user's last event, the user is
+    evicted. A user whose only event is already behind the watermark
+    must not fail the query (a timeout may not lie behind it)."""
+
+    def t(h: int, m: int) -> dt.datetime:
+        return dt.datetime(2024, 1, 1, h, m)
+
+    batches = [
+        [(1, t(12, 0), 1, "view", 0.0, "{}"), (2, t(12, 1), 1, "cart", 0.0, "{}")],
+        # user 2 lands two hours behind the watermark; user 1 converts
+        [(3, t(10, 0), 2, "view", 0.0, "{}"), (4, t(12, 2), 1, "purchase", 0.0, "{}")],
+        # three hours later: the watermark passes user 2's timeout
+        [(5, t(15, 0), 3, "view", 0.0, "{}")],
+    ]
+    d = tmp_path / "ev"
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(str(d / f"b{i}"))
+    stream = (
+        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(d) + "/*")
+    )
+    q = (
+        stateful.funnel_conversions_stateful(stream)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("conv_late")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    rows = spark.sql("SELECT * FROM conv_late").collect()
+    assert [(r.user_id, r.seconds_to_convert) for r in rows] == [(1, 120.0)]
+    removed = sum(op.numRowsRemoved for p in q.recentProgress for op in p.stateOperators)
+    assert removed >= 1
 
 
 def _has_working_protobuf() -> bool:
