@@ -13,7 +13,9 @@ exponent = log(t_probe / t_sf01) / log(scale)
 
 Method: one untimed warmup pass at sf0.001 (JIT/codegen), then
 ``runs`` timed passes per scale, per-query MEDIAN, noop sink — the
-same protocol as bench.py so numbers are comparable. Each query runs
+same protocol as bench.py so numbers are comparable, except that each
+query starts with no cache left by an earlier one: a consumer of a
+family-shared subtree pays for building it on every run. Each query runs
 under its own job group; its shuffle and spill bytes are read from the
 in-process status store through ``perfbench/spans.SparkJobs`` (the
 reader the benchmark's traced runs use), and its AQE-final join nodes
@@ -164,7 +166,14 @@ def measure(spark, jobs: SparkJobs, name: str, sf_dir: str, group: str) -> dict:
     spill MB of the group's stages, and the join-node counts of the SQL
     executions it started (``joins``). A query that raises returns
     ``guard`` instead: a brute-force guard refusing an out-of-contract
-    scale is a result (the guard working), not a crash."""
+    scale is a result (the guard working), not a crash.
+
+    Tracked caches and family-shared subtrees are released first, as
+    ``dump_plans.query_fingerprint`` does: a consumer of a shared
+    subtree then builds it itself, so what it runs (and costs) does not
+    depend on which family members ran before it."""
+    release_tracked()
+    release_shared()
     sql_store = spark._jsparkSession.sharedState().statusStore()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     after_id = _newest_execution_id(sql_store)
@@ -246,10 +255,6 @@ def main() -> int:
                     samples[name].append(m["sec"])
                     if run_i == 0:
                         metrics[name][label] = m
-                release_tracked()
-            # shared family subtrees are per-(sf_dir) keyed; release per
-            # pass so each pass pays each shared build exactly once
-            release_shared()
         for name, xs in samples.items():
             if xs:
                 timings[name][label] = round(statistics.median(xs), 3)

@@ -1,40 +1,83 @@
 """Materialized-view refresh for streaming aggregates.
 
 The reference refreshes its reporting tables by TRUNCATE+INSERT per
-cycle with per-table error isolation (reference snowflake_refresh.py
-pattern, snowflake.py:49-63). The Spark-native equivalent is a
-``foreachBatch`` sink: each micro-batch overwrites (or upserts into)
-the target parquet table — idempotent under micro-batch
-replay, which together with the checkpoint gives the exactly-once
-materialization the reference only approximates.
+cycle (reference snowflake_refresh.py pattern, snowflake.py:49-63).
+The Spark-native equivalent is a ``foreachBatch`` sink: each
+micro-batch overwrites the target parquet tables — idempotent under
+micro-batch replay, which together with the checkpoint gives the
+exactly-once materialization the reference only approximates.
 
-The overwrite is table-wide: a complete-mode aggregate's batch frame
-is the whole view, so each refresh rewrites the whole target.
+One writer, ``overwrite_materializer``, refreshes one or more tables
+from one batch; each table is a projection of the batch. The
+overwrite is table-wide: a complete-mode aggregate's batch frame is
+the whole view, so each refresh rewrites every target. With several
+targets the batch is persisted and computed once, and the tables are
+written concurrently, one file each. A target write that raises fails
+the whole epoch: the query stops, and a restart on the same
+checkpoint replays that epoch and rewrites every target.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
+
+Transform = Callable[[DataFrame], DataFrame]
 
 
 def overwrite_materializer(
-    target_path: str,
+    target_path: str | Mapping[str, Transform | None],
     *,
     partition_by: tuple[str, ...] = (),
-    transform: Callable[[DataFrame], DataFrame] | None = None,
+    transform: Transform | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: full-overwrite refresh (TRUNCATE+INSERT
     semantics). For complete-mode windowed aggregates the batch frame
-    *is* the whole view, so overwrite is the correct refresh."""
+    *is* the whole view, so overwrite is the correct refresh.
 
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        df = transform(batch_df) if transform else batch_df
-        writer = df.write.mode("overwrite")
+    ``target_path`` is one table path (written from ``transform`` of
+    the batch, or the batch itself), or a mapping of table path →
+    transform for a fan-out refresh. A single target is written
+    straight from the batch. Several targets read one persisted copy
+    of the batch: it is computed once, each table is written as one
+    file on its own thread, and it is released when all have finished.
+    """
+    targets = (
+        dict(target_path) if isinstance(target_path, Mapping) else {target_path: transform}
+    )
+
+    def _overwrite(df: DataFrame, path: str, fn: Transform | None, *, files: int | None) -> None:
+        out = fn(df) if fn else df
+        if files:
+            out = out.coalesce(files)
+        writer = out.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(target_path)
+        writer.parquet(path)
+
+    def _write(batch_df: DataFrame, epoch_id: int) -> None:
+        if len(targets) == 1:
+            [(path, fn)] = targets.items()
+            _overwrite(batch_df, path, fn, files=None)
+            return
+        batch_df.persist()
+        try:
+            batch_df.count()
+            # each thread keeps the batch's job group, so stopping the
+            # query cancels its writes too
+            inherit = inheritable_thread_target(batch_df.sparkSession)
+            with ThreadPoolExecutor(len(targets)) as pool:
+                writes = [
+                    pool.submit(inherit(_overwrite), batch_df, path, fn, files=1)
+                    for path, fn in targets.items()
+                ]
+            for w in writes:
+                w.result()
+        finally:
+            batch_df.unpersist()
 
     return _write
 
@@ -42,16 +85,19 @@ def overwrite_materializer(
 def start_materialized_view(
     agg: DataFrame,
     *,
-    target_path: str,
+    target_path: str | Mapping[str, Transform | None],
     checkpoint: str,
     output_mode: str = "complete",
     trigger_seconds: int | None = None,
     partition_by: tuple[str, ...] = (),
     available_now: bool = False,
 ):
-    """Run a streaming aggregate as a continuously-refreshed parquet
-    view (ST4's 5-minute-freshness dashboard feed; set
-    trigger_seconds=300 for the reference's SLO)."""
+    """Run a streaming aggregate as continuously-refreshed parquet
+    view(s) (ST4's 5-minute-freshness dashboard feed; set
+    trigger_seconds=300 for the reference's SLO). ``target_path``
+    takes what ``overwrite_materializer`` takes: one path, or a mapping
+    of path → transform, all refreshed by one query from one
+    checkpoint."""
     writer = (
         agg.writeStream.outputMode(output_mode)
         .foreachBatch(overwrite_materializer(target_path, partition_by=partition_by))

@@ -17,6 +17,7 @@ replays deterministically with Trigger.AvailableNow.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,13 +26,29 @@ from streaming_ecom_analytics_spark.streaming import windows
 from streaming_ecom_analytics_spark.streaming.materialize import start_materialized_view
 
 
+# The views' aggregate is keyed by (view, window, event type): a few
+# thousand groups per day of events whatever the event volume, and the
+# map side pre-aggregates each micro-batch before the shuffle. One state
+# partition holds it. Each further partition adds a state store and, per
+# batch, a reduce task with three hash-aggregation maps (one Tungsten
+# memory page each), with no parallel work to share: the three tables
+# are written one file each, by one task, anyway.
+STATE_PARTITIONS = 1
+
+
 @dataclass
 class StreamingPipeline:
     """Wires a streaming events source to the processed-layer views.
 
-    Each view is an independent query with its own checkpoint —
-    per-view failure isolation, like the reference's per-table refresh
-    loop (snowflake.py:55-61), but with exactly-once restarts.
+    The three views (``windows.PROCESSED_VIEWS``) are one streaming
+    query with one checkpoint: each micro-batch scans the source once,
+    updates one aggregate state store (``STATE_PARTITIONS``), and
+    writes the three view tables from that one aggregate. A failing
+    view write fails the whole epoch; a restart on the checkpoint
+    replays it, and the overwrite refresh makes the replay idempotent.
+    A checkpoint written by the older one-query-per-view layout (a
+    subdirectory per view) is not resumed: the query starts over and
+    rewrites the views.
     """
 
     spark: SparkSession
@@ -52,29 +69,33 @@ class StreamingPipeline:
         )
 
     def start_views(self, events: DataFrame, *, available_now: bool = True) -> list:
-        """Start the processed-layer views over an events stream."""
-        specs = {
-            "funnel_5m": windows.tumbling_event_counts(
-                events, watermark=self.watermark
-            ),
-            "sliding_revenue": windows.sliding_revenue(
-                events, watermark=self.watermark
-            ),
-            "active_users_daily": windows.windowed_active_users(
-                events, watermark=self.watermark
-            ),
+        """Start the processed-layer views over an events stream, as one
+        query. Returns that query once per view, in ``PROCESSED_VIEWS``
+        order, so a caller can read each view's progress by name."""
+        targets = {
+            f"{self.warehouse_dir}/{name}": partial(windows.processed_view, name=name)
+            for name in windows.PROCESSED_VIEWS
         }
-        for name, agg in specs.items():
-            self.queries.append(
-                start_materialized_view(
-                    agg,
-                    target_path=f"{self.warehouse_dir}/{name}",
-                    checkpoint=f"{self.checkpoint_dir}/{name}",
-                    output_mode="complete",
-                    available_now=available_now,
-                )
+        # A stateful query takes its state partition count from its
+        # session's conf when it starts: the query runs on its own clone
+        # of the session, and the checkpoint pins the count for restarts.
+        # So the conf is set only around the start (a query started on
+        # the same session from another thread meanwhile would see it).
+        conf = events.sparkSession.conf
+        shuffle_partitions = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+        try:
+            q = start_materialized_view(
+                windows.processed_view_aggregate(events, watermark=self.watermark),
+                target_path=targets,
+                checkpoint=self.checkpoint_dir,
+                output_mode="complete",
+                available_now=available_now,
             )
-        return self.queries
+        finally:
+            conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+        self.queries.append(q)
+        return [q] * len(targets)
 
     def await_all(self) -> None:
         for q in self.queries:

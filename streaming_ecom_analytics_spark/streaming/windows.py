@@ -173,6 +173,102 @@ def windowed_active_users(
     )
 
 
+# The processed-layer views that StreamingPipeline maintains, and how
+# each reads the one shared aggregate below. Each projection equals the
+# batch twin named beside it, called with its defaults.
+PROCESSED_VIEWS: dict[str, tuple[str, ...]] = {
+    # tumbling_event_counts: 5-minute tumbling windows
+    "funnel_5m": ("window_start", "window_end", "key AS event_type", "n AS event_count"),
+    # sliding_revenue: 10-minute windows sliding by 5 minutes
+    "sliding_revenue": ("window_start", "window_end", "CAST(price_sum AS DOUBLE) AS revenue"),
+    # windowed_active_users: 1-day tumbling windows
+    "active_users_daily": ("window_start", "window_end", "key AS event_type", "users AS active_users"),
+}
+
+
+def processed_view_rows(events: DataFrame, *, watermark: str | None = "1 hour") -> DataFrame:
+    """Every event once, as one keyed row per processed-view window it
+    falls in: ``(view, window_start, window_end, key, price, user)``.
+
+    - ``funnel_5m``: one 5-minute row, keyed by event_type;
+    - ``sliding_revenue``: purchases only, one row for each of the two
+      10-minute windows (sliding by 5) that hold the event, carrying
+      the decimal price;
+    - ``active_users_daily``: one 1-day row, keyed by event_type,
+      carrying the user.
+
+    Window bounds come from ``F.window`` itself, so they are the batch
+    twins' bounds. Spark resolves one window expression per operator,
+    so each tumbling window is its own projection, and the sliding
+    windows are the slide-sized tumbling window's start minus 0 and 1
+    slides. Events with a NULL ``ts`` fall out, as in the twins.
+    """
+    slide_us = 5 * 60 * 1_000_000
+    df = (
+        _maybe_watermark(events, "ts", watermark)
+        .withColumn("_w5", F.window("ts", "5 minutes"))
+        .withColumn("_w1d", F.window("ts", "1 day"))
+    )
+    no_key = F.lit(None).cast("string")
+    no_price = F.lit(None).cast("decimal(18,2)")
+    no_user = F.lit(None).cast("long")
+
+    def row(view: str, start: Column, end: Column, key: Column, price: Column, user: Column) -> Column:
+        return F.struct(
+            F.lit(view).alias("view"),
+            start.alias("window_start"),
+            end.alias("window_end"),
+            key.alias("key"),
+            price.alias("price"),
+            user.alias("user"),
+        )
+
+    slide_start = F.unix_micros(F.col("_w5.start"))
+    price = F.col("value").cast("decimal(18,2)")
+    sliding = [
+        F.when(
+            F.col("event_type") == "purchase",
+            row(
+                "sliding_revenue",
+                F.timestamp_micros(slide_start - k * slide_us),
+                F.timestamp_micros(slide_start + (2 - k) * slide_us),
+                no_key, price, no_user,
+            ),
+        )
+        for k in (0, 1)
+    ]
+    rows = F.array(
+        row("funnel_5m", F.col("_w5.start"), F.col("_w5.end"), F.col("event_type"), no_price, no_user),
+        *sliding,
+        row("active_users_daily", F.col("_w1d.start"), F.col("_w1d.end"),
+            F.col("event_type"), no_price, F.col("user_id")),
+    )
+    # non-purchases leave NULL sliding elements behind
+    return df.select(F.explode(rows).alias("r")).where(F.col("r").isNotNull()).select("r.*")
+
+
+def processed_view_aggregate(events: DataFrame, *, watermark: str | None = "1 hour") -> DataFrame:
+    """The three processed views as one aggregate over
+    ``processed_view_rows``: per (view, window, key) the row count, the
+    exact decimal price sum and the HLL user count (at
+    ``windowed_active_users``' default rsd). Split it into the view
+    tables with ``processed_view``."""
+    return (
+        processed_view_rows(events, watermark=watermark)
+        .groupBy("view", "window_start", "window_end", "key")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("price").alias("price_sum"),
+            F.approx_count_distinct("user", 0.05).alias("users"),
+        )
+    )
+
+
+def processed_view(agg: DataFrame, name: str) -> DataFrame:
+    """View ``name``'s table out of ``processed_view_aggregate``."""
+    return agg.where(F.col("view") == name).selectExpr(*PROCESSED_VIEWS[name])
+
+
 def rank_topk_per_window(
     counts: DataFrame, *, k: int = 3, order_col: str = "event_count"
 ) -> DataFrame:

@@ -10,6 +10,7 @@ import importlib.util
 from pathlib import Path
 
 import numpy as np
+import pytest
 
 from .conftest import SF_DIR
 
@@ -71,15 +72,20 @@ def test_generated_distributions_mirror_testdata_profile():
     assert 0.03 < np.mean(pulls) < 0.15
 
 
-def test_probe_reads_query_telemetry_from_the_status_store(spark):
-    """scale_probe.measure reads shuffle/spill bytes through
-    perfbench/spans.SparkJobs and AQE-final join nodes from the SQL
-    status store, both in-process: the session keeps its UI off."""
+def _probe():
     spec = importlib.util.spec_from_file_location(
         "scale_probe", Path(__file__).resolve().parents[1] / "scripts" / "scale_probe.py"
     )
     probe = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(probe)
+    return probe
+
+
+def test_probe_reads_query_telemetry_from_the_status_store(spark):
+    """scale_probe.measure reads shuffle/spill bytes through
+    perfbench/spans.SparkJobs and AQE-final join nodes from the SQL
+    status store, both in-process: the session keeps its UI off."""
+    probe = _probe()
     try:
         m = probe.measure(
             spark, probe.SparkJobs(spark), "revenue_by_nation", SF_DIR, "scale_probe_test"
@@ -91,3 +97,25 @@ def test_probe_reads_query_telemetry_from_the_status_store(spark):
     assert m["spill_mb"] >= 0
     assert sum(m["joins"].values()) >= 1, m["joins"]
     assert spark.sparkContext.uiWebUrl is None
+
+
+def test_probe_measure_ignores_a_sibling_materializing_the_shared_subtree(spark):
+    """A family-shared subtree runs differently once a sibling consumer
+    has materialized it: the consumer then reads the cache and writes no
+    shuffle of its own. measure() releases shared subtrees first, so a
+    consumer's shuffle bytes and join counts do not depend on what ran
+    before it."""
+    from streaming_ecom_analytics_spark.plans import REGISTRY
+
+    probe = _probe()
+    jobs = probe.SparkJobs(spark)
+    try:
+        before = probe.measure(spark, jobs, "near_dup_minhash_lsh", SF_DIR, "probe_before")
+        # dedup_clusters reads the same persisted LSH pair set and runs it
+        REGISTRY["dedup_clusters"].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        after = probe.measure(spark, jobs, "near_dup_minhash_lsh", SF_DIR, "probe_after")
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    assert before["joins"] and before["joins"] == after["joins"]
+    assert before["shuffle_write_mb"] > 0
+    assert after["shuffle_write_mb"] == pytest.approx(before["shuffle_write_mb"], rel=0.05)

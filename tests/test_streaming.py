@@ -6,6 +6,11 @@ resume without reprocessing."""
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import importlib.util
+import json
+import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -150,6 +155,113 @@ def test_pipeline_end_to_end(spark, events_dir, tmp_path):
     assert funnel.agg(F.sum("event_count")).first()[0] == 7
     active = spark.read.parquet(str(tmp_path / "wh" / "active_users_daily"))
     assert active.count() > 0
+
+
+def _at(day: int, hour: int, minute: int, second: int = 0) -> dt.datetime:
+    return dt.datetime(2024, 1, day, hour, minute, second)
+
+
+# Four files = four micro-batches for the processed-view tests: events on
+# 5-minute and day boundaries, purchases whose sliding windows overlap
+# (10:05 / 10:07:30 / 10:12 share 10:05–10:15; 23:59:59 / 00:00 share
+# 23:55–00:05), several users per (day, event type), and one event with
+# no event type.
+VIEW_BATCHES = [
+    [(1, _at(1, 0, 0), 1, "view", 1.0, "{}"), (2, _at(1, 10, 5), 2, "purchase", 20.0, "{}"),
+     (3, _at(1, 10, 7, 30), 3, "purchase", 7.25, "{}"), (4, _at(1, 10, 9, 59), 1, "view", 2.0, "{}")],
+    [(5, _at(1, 23, 59, 59), 2, "purchase", 3.1, "{}"), (6, _at(2, 0, 0), 4, "purchase", 4.2, "{}"),
+     (7, _at(1, 10, 12), 2, "purchase", 0.1, "{}")],
+    [(8, _at(1, 12, 0), 5, "view", 1.0, "{}"), (9, _at(1, 13, 0), 6, "view", 1.0, "{}"),
+     (10, _at(1, 10, 10), 3, "cart", 5.0, "{}")],
+    [(11, _at(2, 8, 0), 4, "view", 1.0, "{}"), (12, _at(2, 9, 0), 7, "view", 1.0, "{}"),
+     (13, _at(2, 9, 30), 7, None, 1.0, "{}"), (14, _at(2, 0, 5), 5, "purchase", 9.99, "{}")],
+]
+
+
+def _land(spark, src, batches, first: int = 0) -> None:
+    for i, rows in enumerate(batches, start=first):
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(str(src / f"batch_{i}"))
+
+
+@functools.cache
+def _driver_sim():
+    spec = importlib.util.spec_from_file_location(
+        "driver_sim", Path(__file__).resolve().parents[1] / "scripts" / "driver_sim.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _assert_views_match_batch_twins(spark, src, wh) -> None:
+    batch = spark.read.schema(SCHEMA).parquet(str(src / "*"))
+    twins = {
+        "funnel_5m": windows.tumbling_event_counts(batch, watermark=None),
+        "sliding_revenue": windows.sliding_revenue(batch, watermark=None),
+        "active_users_daily": windows.windowed_active_users(batch, watermark=None),
+    }
+    assert list(twins) == list(windows.PROCESSED_VIEWS)
+    for name, twin in twins.items():
+        got = spark.read.parquet(str(wh / name)).toPandas()
+        want = twin.toPandas()
+        assert len(got) == len(want) > 0, name
+        value_hash = _driver_sim().value_hash
+        assert value_hash(got) == value_hash(want), name
+
+
+def _progress(q) -> list[dict]:
+    return [json.loads(p.json) for p in q.recentProgress]
+
+
+def test_pipeline_views_are_one_query_equal_to_batch_twins(spark, tmp_path):
+    """The three processed views run as ONE query with one checkpoint
+    that reads each file once, and each view table equals its batch
+    twin."""
+    src, wh, ck = tmp_path / "src", tmp_path / "wh", tmp_path / "ck"
+    _land(spark, src, VIEW_BATCHES)
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    pipe = StreamingPipeline(spark, warehouse_dir=str(wh), checkpoint_dir=str(ck))
+    handles = pipe.start_views(pipe.file_events_source(str(src / "*")), available_now=True)
+    pipe.await_all()
+
+    assert len(handles) == len(windows.PROCESSED_VIEWS)
+    assert len(pipe.queries) == 1 and {h.id for h in handles} == {pipe.queries[0].id}
+    # one checkpoint, at the directory's root, with one stateful operator
+    # and one state store, whatever the session's shuffle partitions
+    assert (ck / "metadata").is_file() and os.listdir(ck / "state") == ["0"]
+    assert sorted(p.name for p in (ck / "state" / "0").iterdir() if p.name.isdigit()) == ["0"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_partitions != "1"
+    # one source scan per batch: numInputRows is the file's rows, not a
+    # multiple of them
+    rows = [p["numInputRows"] for p in _progress(handles[0]) if p["numInputRows"]]
+    assert rows == [len(b) for b in VIEW_BATCHES]
+    _assert_views_match_batch_twins(spark, src, wh)
+    # one file per view table
+    for name in windows.PROCESSED_VIEWS:
+        assert len(list((wh / name).glob("*.parquet"))) == 1, name
+
+
+def test_pipeline_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
+    """Run over half the files, land the rest, restart on the same
+    checkpoint: every input row counted once, and every view equals its
+    batch twin over all files."""
+    src, wh, ck = tmp_path / "src", tmp_path / "wh", tmp_path / "ck"
+    half = len(VIEW_BATCHES) // 2
+
+    def run() -> int:
+        pipe = StreamingPipeline(spark, warehouse_dir=str(wh), checkpoint_dir=str(ck))
+        pipe.start_views(pipe.file_events_source(str(src / "*")), available_now=True)
+        pipe.await_all()
+        return sum(p["numInputRows"] for p in _progress(pipe.queries[0]))
+
+    _land(spark, src, VIEW_BATCHES[:half])
+    assert run() == sum(map(len, VIEW_BATCHES[:half]))
+    _land(spark, src, VIEW_BATCHES[half:], first=half)
+    assert run() == sum(map(len, VIEW_BATCHES[half:]))  # the restart reads only new files
+
+    funnel = spark.read.parquet(str(wh / "funnel_5m"))
+    assert funnel.agg(F.sum("event_count")).first()[0] == sum(map(len, VIEW_BATCHES))
+    _assert_views_match_batch_twins(spark, src, wh)
 
 
 def test_session_window_streaming(spark, events_dir):
