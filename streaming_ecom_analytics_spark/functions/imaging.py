@@ -212,17 +212,6 @@ def encode_ppm(img: np.ndarray) -> bytes:
 # ---- transforms ----
 
 
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize via pure index arithmetic — the
-    deterministic, dependency-free downsampler for thumbnail/feature
-    prep (bilinear would need no deps either, but NN is exactly
-    reproducible across numpy versions)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(height) * h // height).clip(0, h - 1)
-    xs = (np.arange(width) * w // width).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 def to_luma(img: np.ndarray) -> np.ndarray:
     """uint8 image (grey / RGB / RGBA) → float64 luma plane (ITU-R
     BT.601 weights for RGB)."""

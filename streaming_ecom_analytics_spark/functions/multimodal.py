@@ -312,29 +312,6 @@ def synthesize_audio(spark, n: int = 32, *, seed: int = 42) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def frame_sample_plan(
-    media: DataFrame, *, every_ms: int = 1000
-) -> DataFrame:
-    """Video frame-sampling *plan*: expands each video row into frame
-    timestamps (metadata-only — the decode of each frame is the stubbed
-    step). Demonstrates the explode-by-duration pattern that shards one
-    huge video row into many small work units before the expensive UDF,
-    which is what keeps partitions balanced at scale."""
-    return (
-        media.filter(F.col("media_type") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 VIDEO_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

@@ -576,16 +576,6 @@ def _ddsketch_collapse(
     )
 
 
-def ddsketch_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches of disjoint corpora: union + counter re-sum.
-    Exactly equals the sketch of the concatenated corpus (unit-pinned)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c != "c"]
-    return out.groupBy(*keys).agg(F.sum("c").alias("c"))
-
-
 def ddsketch_quantiles(
     sketch: DataFrame,
     *,

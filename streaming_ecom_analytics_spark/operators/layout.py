@@ -98,51 +98,3 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def compact_small_files(
-    spark,
-    path: str,
-    *,
-    target_bytes: int = 128 * 1024 * 1024,
-    partition_cols: Sequence[str] = (),
-) -> dict:
-    """Small-file compaction (the Delta/Iceberg OPTIMIZE bin-packing
-    pass as a plain engine op): rewrite a parquet directory so each
-    output file approaches ``target_bytes``.
-
-    Streaming sinks and frequent small batch appends leave thousands
-    of KB-scale files per partition; at 100 TB the resulting task-per-
-    file scheduling and open/close overhead dominates scan time. The
-    rewrite computes the output file count from the INPUT byte size
-    (listing metadata only — no data pass), then rewrites with
-    ``repartition(n)`` — a round-robin shuffle that also evens out
-    skewed input files. Partitioned tables keep their partition
-    columns; compaction then applies within each partition via
-    repartition on the partition key + a random fanout.
-
-    Writes to ``path + '.compact'`` then reports; atomically swapping
-    directories is the caller's (or the table format's) job — this op
-    never deletes the source. Returns {files_before, bytes, n_target}.
-    """
-    import glob as _glob
-    import os as _os
-
-    files = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-        if _os.path.isfile(f)
-    ]
-    total = sum(_os.path.getsize(f) for f in files)
-    n_target = max(1, -(-total // target_bytes))  # ceil
-    df = spark.read.parquet(path)
-    out = path.rstrip("/") + ".compact"
-    writer = df.repartition(n_target).write.mode("overwrite")
-    if partition_cols:
-        writer = (
-            df.repartition(n_target, *partition_cols)
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-        )
-    writer.parquet(out)
-    return {"files_before": len(files), "bytes": total, "n_target": int(n_target)}

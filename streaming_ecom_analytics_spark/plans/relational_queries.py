@@ -427,11 +427,10 @@ _FUNNEL_ORACLE = """
 
 @register("funnel_conversions", _FUNNEL_ORACLE, headline=True)
 def q_funnel_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view→click→purchase conversions per user — the stateful
-    streaming operator's batch twin (streaming/stateful.py). The strict
-    greedy machine is deterministic under timestamp ties, so it gets a
-    full DuckDB oracle: a recursive CTE that replays one conversion per
-    round."""
+    """Ordered view→click→purchase conversions per user — the stage
+    machine of streaming/stateful.py. The strict greedy machine is
+    deterministic under timestamp ties, so it gets a full DuckDB
+    oracle: a recursive CTE that replays one conversion per round."""
     from streaming_ecom_analytics_spark.streaming.stateful import (
         funnel_conversions_batch,
     )

@@ -63,24 +63,6 @@ TESTDATA_EVENT_SCHEMA = T.StructType(
     ]
 )
 
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), True),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
 TESTDATA_TABLES = (
     "region",
     "nation",

@@ -13,9 +13,10 @@ inside whole-stage codegen, at any scale. The same expressions work in
 batch and streaming (same logical plan, different engine).
 
 Kafka itself is an option bundle on the standard ``format("kafka")``
-source/sink (S5-S7); tests run brokerless against files with the same
-serialize/parse expressions, which is exactly what makes the contract
-an engine surface rather than connector glue.
+source (S6, ``kafka_source``); the publish side (S5) is
+``serialize_events`` plus a batch write. Tests run brokerless against
+files with the same serialize/parse expressions, which is exactly what
+makes the contract an engine surface rather than connector glue.
 """
 
 from __future__ import annotations
@@ -144,34 +145,11 @@ def kafka_source(
     )
 
 
-def kafka_sink(
-    df: DataFrame,
-    *,
-    brokers: str,
-    topic: str,
-    checkpoint: str,
-    trigger_seconds: int | None = None,
-):
-    """Streaming Kafka sink (S5/S7): expects a (key, value) frame from
-    serialize_events. Distributed writes — the collect()-free
-    realization of the reference producer."""
-    writer = (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
 def decode_events_with_dlq(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """parse_events, but nothing is dropped silently: returns
     ``(events, rejects)`` where rejects carries the ORIGINAL payload of
     every row that failed JSON parsing or the producer's timestamp
-    gate, tagged with the reason — the ingest-side dead-letter queue
-    (sibling of the streaming late-row DLQ).
+    gate, tagged with the reason — the ingest-side dead-letter queue.
 
     Both frames share one parse subplan; the reject payload survives
     byte-for-byte for replay after a producer fix. At 100 TB the DLQ

@@ -63,47 +63,3 @@ class Lake:
         written from an empty frame (``_SUCCESS`` only) still reads."""
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(self.path(layer, table))
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        layer: str,
-        table: str,
-        *,
-        bucket_col: str,
-        n_buckets: int = 32,
-        mode: str = "overwrite",
-    ) -> str:
-        """Write a table hash-bucketed (and sorted) on a join key.
-
-        Bucketing is THE co-located-join primitive at scale: two
-        tables bucketed on the same key with the same bucket count
-        join with ZERO exchange — each task reads matching bucket
-        files from both sides (plan-asserted in tests/test_plans.py).
-        For a fact table joined repeatedly on user_id/order_key, this
-        converts every join's corpus-sized shuffle into a one-time
-        write-side cost. Registered as an external table (explicit
-        path) so the files stay inside the lake namespace; bucket
-        metadata lives in the session catalog, which on a real
-        deployment is the shared metastore.
-        """
-        target = self.path(layer, table)
-        name = f"{layer}_{table}".replace("-", "_").replace(".", "_")
-        spark = df.sparkSession
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            df.write.mode(mode)
-            .format("parquet")
-            .option("path", target)
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .saveAsTable(name)
-        )
-        return name
-
-    def read_table(self, spark: SparkSession, layer: str, table: str) -> DataFrame:
-        """Read a bucketed table through the catalog (bucket metadata
-        only survives the catalog path — spark.read.parquet on the
-        same files would lose bucketing and reintroduce the shuffle)."""
-        name = f"{layer}_{table}".replace("-", "_").replace(".", "_")
-        return spark.table(name)

@@ -10,11 +10,11 @@ exactly-once materialization the reference only approximates.
 One writer, ``overwrite_materializer``, refreshes one or more tables
 from one batch; each table is a projection of the batch. The
 overwrite is table-wide: a complete-mode aggregate's batch frame is
-the whole view, so each refresh rewrites every target. With several
-targets the batch is persisted and computed once, and the tables are
-written concurrently, one file each. A target write that raises fails
-the whole epoch: the query stops, and a restart on the same
-checkpoint replays that epoch and rewrites every target.
+the whole view, so each refresh rewrites every target. The batch is
+persisted and computed once, and the tables are written concurrently,
+one file each. A target write that raises fails the whole epoch: the
+query stops, and a restart on the same checkpoint replays that epoch
+and rewrites every target.
 """
 
 from __future__ import annotations
@@ -29,40 +29,25 @@ Transform = Callable[[DataFrame], DataFrame]
 
 
 def overwrite_materializer(
-    target_path: str | Mapping[str, Transform | None],
-    *,
-    partition_by: tuple[str, ...] = (),
-    transform: Transform | None = None,
+    targets: Mapping[str, Transform | None],
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: full-overwrite refresh (TRUNCATE+INSERT
     semantics). For complete-mode windowed aggregates the batch frame
     *is* the whole view, so overwrite is the correct refresh.
 
-    ``target_path`` is one table path (written from ``transform`` of
-    the batch, or the batch itself), or a mapping of table path →
-    transform for a fan-out refresh. A single target is written
-    straight from the batch. Several targets read one persisted copy
-    of the batch: it is computed once, each table is written as one
-    file on its own thread, and it is released when all have finished.
+    ``targets`` maps each table path to the transform that projects it
+    from the batch (``None`` writes the batch itself). The tables read
+    one persisted copy of the batch: it is computed once, each table is
+    written as one file on its own thread, and it is released when all
+    have finished.
     """
-    targets = (
-        dict(target_path) if isinstance(target_path, Mapping) else {target_path: transform}
-    )
+    targets = dict(targets)
 
-    def _overwrite(df: DataFrame, path: str, fn: Transform | None, *, files: int | None) -> None:
+    def _overwrite(df: DataFrame, path: str, fn: Transform | None) -> None:
         out = fn(df) if fn else df
-        if files:
-            out = out.coalesce(files)
-        writer = out.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        out.coalesce(1).write.mode("overwrite").parquet(path)
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        if len(targets) == 1:
-            [(path, fn)] = targets.items()
-            _overwrite(batch_df, path, fn, files=None)
-            return
         batch_df.persist()
         try:
             batch_df.count()
@@ -71,7 +56,7 @@ def overwrite_materializer(
             inherit = inheritable_thread_target(batch_df.sparkSession)
             with ThreadPoolExecutor(len(targets)) as pool:
                 writes = [
-                    pool.submit(inherit(_overwrite), batch_df, path, fn, files=1)
+                    pool.submit(inherit(_overwrite), batch_df, path, fn)
                     for path, fn in targets.items()
                 ]
             for w in writes:
@@ -85,22 +70,20 @@ def overwrite_materializer(
 def start_materialized_view(
     agg: DataFrame,
     *,
-    target_path: str | Mapping[str, Transform | None],
+    target_path: Mapping[str, Transform | None],
     checkpoint: str,
     output_mode: str = "complete",
     trigger_seconds: int | None = None,
-    partition_by: tuple[str, ...] = (),
     available_now: bool = False,
 ):
     """Run a streaming aggregate as continuously-refreshed parquet
     view(s) (ST4's 5-minute-freshness dashboard feed; set
     trigger_seconds=300 for the reference's SLO). ``target_path``
-    takes what ``overwrite_materializer`` takes: one path, or a mapping
-    of path → transform, all refreshed by one query from one
-    checkpoint."""
+    takes what ``overwrite_materializer`` takes: a mapping of path →
+    transform, all refreshed by one query from one checkpoint."""
     writer = (
         agg.writeStream.outputMode(output_mode)
-        .foreachBatch(overwrite_materializer(target_path, partition_by=partition_by))
+        .foreachBatch(overwrite_materializer(target_path))
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
@@ -108,28 +91,6 @@ def start_materialized_view(
     elif trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
-
-
-def versioned_materializer(
-    table_path: str,
-    *,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function committing each refresh as a SNAPSHOT of a
-    VersionedTable (sources/versioned_lake.py): readers mid-refresh
-    keep the previous consistent version (a plain parquet overwrite can
-    tear a concurrent read), every refresh stays time-travelable, and
-    micro-batch replay after a crash just re-commits — idempotent in
-    content, with the epoch recorded in the commit message for audit."""
-    from streaming_ecom_analytics_spark.sources.versioned_lake import VersionedTable
-
-    table = VersionedTable(table_path)
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        df = transform(batch_df) if transform else batch_df
-        table.commit(df, mode="overwrite", message=f"epoch={epoch_id}")
-
-    return _write
 
 
 def cdc_upsert_materializer(

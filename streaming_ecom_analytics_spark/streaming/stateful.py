@@ -1,11 +1,11 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""Ordered per-user funnel: a strict stage machine over events.
 
 The reference's funnel is stage *counts* (snowflake_refresh.py:30-39) —
-that parity lives in windows.tumbling_event_counts. This module adds
-the operator class Spark's built-ins can't express: an ORDERED per-user
-funnel tracker ("view → cart → purchase, in that order, millisecond
-latency" is the reference README's aspiration, README.md:5) as
-arbitrary per-key state over a stream.
+that parity lives in windows.tumbling_event_counts, and the streaming
+views keep counts only. This module adds the ordered form ("view →
+cart → purchase, in that order" is the reference README's aspiration,
+README.md:5) as a batch operator, registered as ``funnel_conversions``
+and hash-checked against a DuckDB recursive CTE.
 
 Semantics (strict, tie-robust): a conversion is the greedy sequential
 match v < c < p with v = the earliest stage-0 event strictly after the
@@ -13,29 +13,14 @@ previous conversion's completion, c = the earliest stage-1 event
 strictly after v, and p = the earliest stage-2 event strictly after c.
 Strict inequalities make the result independent of how equal-timestamp
 events are ordered, so the operator is deterministic under any
-partitioning — and expressible as a recursive SQL oracle (the
-registered batch query is hash-checked against a DuckDB recursive CTE).
+partitioning.
 
-Design:
-- keyed by user; state = (furthest funnel stage reached, its event
-  time, first-seen time);
-- the replay is vectorized: per (user, stage) sorted timestamp arrays
-  + numpy searchsorted per machine step — O(conversions · log n) per
-  user, no per-event Python loop;
-- completed funnels emit one row (user, started_at, completed_at,
-  seconds_to_convert) and reset — the operator's output stream is the
-  conversion log;
-- state is bounded by an event-time timeout under a watermark on
-  ``ts``: a user is evicted (emitting nothing) once the stream's event
-  time has moved ``timeout_minutes`` past their last event, which is
-  what keeps 100 TB of users from accumulating state forever. Event
-  time, not wall-clock time, so a bounded ``availableNow`` backfill
-  drains and stops.
-
-The same machine doubles as a batch operator — partition-wise
-``mapInPandas`` over user-sorted partitions (no per-group pandas
-overhead; see funnel_conversions_batch) — used by the batch parity
-test and the registry's oracle-checked query.
+Design: partition-wise ``mapInPandas`` over user-sorted partitions (no
+per-group pandas overhead; see funnel_conversions_batch). Per user, the
+replay runs on per-stage sorted timestamp arrays with one numpy
+searchsorted per machine step — O(conversions · log n) per user, no
+per-event Python loop. Each completed funnel emits one row (user,
+started_at, completed_at, seconds_to_convert).
 """
 
 from __future__ import annotations
@@ -45,7 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 FUNNEL_STAGES = ("view", "cart", "purchase")
 
@@ -58,113 +42,29 @@ CONVERSION_SCHEMA = T.StructType(
     ]
 )
 
-_STATE_SCHEMA = "stage INT, stage_ts BIGINT, started BIGINT"
 
-
-def _advance(events: pd.DataFrame, stage: int, stage_ts: int, started: int, stages):
-    """Advance the strict greedy stage machine over a batch of events.
+def _replay(by_stage: list) -> list[tuple[int, int]]:
+    """The machine core over pre-sorted per-stage timestamp arrays:
+    one (started, completed) pair per conversion.
 
     Times are integer epoch-MICROseconds throughout — float seconds
     round-trip with sub-microsecond noise that Arrow then (rightly)
-    refuses to cast back into a timestamp[us] column.
-
-    Vectorized: one sorted int64 array per stage, each machine step a
-    numpy searchsorted (first event of the wanted stage strictly after
-    the current stage's timestamp). Equivalent to an event-at-a-time
-    replay in timestamp order, but O(conversions · log n) instead of
-    O(n) Python-loop iterations.
-    """
-    # normalize to ns first: the series unit varies by Arrow/pandas version
-    ts_us = events["ts"].to_numpy(dtype="datetime64[ns]").astype("int64") // 1000
-    et = events["event_type"].to_numpy()
-    by_stage = [np.sort(ts_us[et == s]) for s in stages]
-    return _replay(by_stage, stage, stage_ts, started)
-
-
-def _replay(by_stage: list, stage: int, stage_ts: int, started: int):
-    """The machine core over pre-sorted per-stage timestamp arrays."""
+    refuses to cast back into a timestamp[us] column."""
+    views, *later = by_stage
     conversions = []
-    n_stages = len(by_stage)
+    ts = 0
     while True:
-        if stage == 0:
-            views = by_stage[0]
-            i = int(np.searchsorted(views, stage_ts, side="right"))
-            if i >= len(views):
-                break
-            started = stage_ts = int(views[i])
-            stage = 1
-        stalled = False
-        while 0 < stage < n_stages:
-            arr = by_stage[stage]
-            j = int(np.searchsorted(arr, stage_ts, side="right"))
+        i = int(np.searchsorted(views, ts, side="right"))
+        if i >= len(views):
+            return conversions
+        started = ts = int(views[i])
+        for arr in later:
+            j = int(np.searchsorted(arr, ts, side="right"))
             if j >= len(arr):
-                stalled = True
-                break
-            stage_ts = int(arr[j])
-            stage += 1
-        if stalled:
-            break
-        conversions.append((started, stage_ts, (stage_ts - started) / 1_000_000.0))
-        stage = 0  # stage_ts keeps the purchase ts: next view must be later
-    return conversions, stage, stage_ts, started
-
-
-def funnel_conversions_stateful(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    stages: tuple[str, ...] = FUNNEL_STAGES,
-    timeout_minutes: int = 60,
-) -> DataFrame:
-    """Streaming ordered-funnel tracker. Input must be a streaming
-    frame; output appends one row per completed funnel.
-
-    The watermark on ``ts`` trails the newest event time seen by
-    ``timeout_minutes``. A user's state expires once the watermark
-    passes their last event; a user whose new events all lie behind
-    the watermark expires at its next advance."""
-
-    def track(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        stage, stage_ts, started = state.get if state.exists else (0, 0, 0)
-        out = []
-        last_ms = 0
-        for pdf in pdf_iter:
-            convs, stage, stage_ts, started = _advance(
-                pdf, stage, stage_ts, started, stages
-            )
-            out.extend(convs)
-            last_ms = max(last_ms, int(pdf["ts"].max().value // 1_000_000))
-        state.update((stage, stage_ts, started))
-        # the operator does not drop late rows, and a timeout may not
-        # lie behind the watermark
-        state.setTimeoutTimestamp(max(last_ms, state.getCurrentWatermarkMs()))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": user_id,
-                    "started_at": [pd.Timestamp(s * 1000) for s, _, _ in out],
-                    "completed_at": [pd.Timestamp(c * 1000) for _, c, _ in out],
-                    "seconds_to_convert": [d for _, _, d in out],
-                }
-            )
-
-    renamed = (
-        events.filter(F.col("event_type").isin(list(stages)))
-        .selectExpr(f"{user_col} AS user_id", f"{ts_col} AS ts", "event_type")
-        .withWatermark("ts", f"{timeout_minutes} minutes")
-    )
-    return renamed.groupBy("user_id").applyInPandasWithState(
-        track,
-        outputStructType=CONVERSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+                return conversions  # stalled mid-funnel
+            ts = int(arr[j])
+        # ts keeps the purchase ts: the next view must be later
+        conversions.append((started, ts))
 
 
 def funnel_conversions_batch(
@@ -174,8 +74,7 @@ def funnel_conversions_batch(
     ts_col: str = "ts",
     stages: tuple[str, ...] = FUNNEL_STAGES,
 ) -> DataFrame:
-    """Batch twin of the stateful tracker: same strict stage machine,
-    partition-wise.
+    """The strict stage machine, run partition-wise.
 
     NOT ``groupBy(user).applyInPandas``: that pays a per-GROUP pandas
     DataFrame construction (~ms each), which at millions of users is
@@ -231,8 +130,7 @@ def _process_sorted(pdf: pd.DataFrame, stages) -> pd.DataFrame:
         # per-stage slices are already ts-sorted (partition sort order)
         seg_si, seg_ts = si[s:e], ts_us[s:e]
         by_stage = [seg_ts[seg_si == k] for k in range(len(stages))]
-        convs, *_ = _replay(by_stage, 0, 0, 0)
-        for st, cp, _ in convs:
+        for st, cp in _replay(by_stage):
             out_uid.append(int(uid[s]))
             out_started.append(st)
             out_completed.append(cp)

@@ -278,8 +278,8 @@ def rank_topk_per_window(
     mode cannot rank (a later row may displace an earlier one), so the
     streaming form runs the COUNTS as the stateful aggregate and
     applies this rank per refresh in the foreachBatch materializer
-    (overwrite_materializer(transform=...)) — the view is then always
-    a consistent post-rank snapshot."""
+    (overwrite_materializer({path: transform})) — the view is then
+    always a consistent post-rank snapshot."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy("window_start", "window_end").orderBy(
@@ -310,71 +310,3 @@ def windowed_top_event_types(
         window_size=window_size, watermark=watermark,
     )
     return rank_topk_per_window(counts, k=k)
-
-
-def late_dlq_splitter(
-    dlq_path: str,
-    *,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-):
-    """Late-row dead-letter capture: Structured Streaming silently
-    DROPS rows behind the watermark once they reach a stateful
-    operator — a silent-data-loss class at 100 TB ingest. This
-    foreachBatch pre-stage tees rows behind the watermark into an
-    append-only parquet DLQ (tagged with the batch id) and returns the
-    on-time subset for the downstream aggregate — so nothing is lost
-    silently and the DLQ feeds the batch reconciliation layer.
-
-    The lateness rule mirrors Spark\'s watermark arithmetic EXACTLY:
-    Spark derives batch N\'s watermark from the max event time of
-    batches *before* N (the one-batch propagation lag), so the
-    splitter carries that high-water mark across batches in closure
-    state and judges each batch against the PRIOR mark, never its own
-    max — a row that arrives in the same batch that advances the clock
-    is on time, exactly as the stateful operator would treat it. The
-    per-batch cost is one scalar max (the same eventTimeStats pass
-    Spark runs internally). After a restart the carried mark reseeds
-    from the first post-restart batch, so that batch quarantines
-    nothing — conservative in the safe direction (rows pass through to
-    the stateful operator, which still applies its checkpointed
-    watermark).
-
-    NULL event times are quarantined to the DLQ in EVERY batch (r5
-    advisor finding): a three-valued late predicate would silently
-    exclude them from both the late and the on-time side, and a NULL
-    event-time row is unusable downstream anyway — a watermarked
-    windowed aggregate can never emit its (NULL-window) group in
-    append mode, which is exactly the silent-loss class this operator
-    exists to catch. Returns a ``(batch_df, batch_id) -> on_time_df``
-    callable for materializer wiring.
-    """
-    from pyspark.sql import functions as F
-
-    parts = watermark.split()
-    unit = parts[1].rstrip("s")
-    amount = int(parts[0])
-    seconds = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}[unit]
-    delay_us = amount * seconds * 1_000_000
-    state: dict[str, int | None] = {"hw": None}
-
-    def split_batch(batch, batch_id: int):
-        prev_hw = state["hw"]
-        ts_us = F.unix_micros(F.col(ts_col))
-        # advance the carried mark with THIS batch's max (one scalar)
-        cur = batch.agg(F.max(ts_us).alias("hw")).collect()[0].hw
-        if cur is not None:
-            state["hw"] = cur if prev_hw is None else max(prev_hw, cur)
-        # NULL ts can never be judged on time — always quarantined, so
-        # the predicate below is never three-valued on the kept side
-        quarantine = F.col(ts_col).isNull()
-        if prev_hw is not None:
-            quarantine = quarantine | (ts_us < F.lit(prev_hw - delay_us))
-        late = batch.filter(quarantine).withColumn(
-            "dlq_batch_id", F.lit(batch_id)
-        )
-        if not late.isEmpty():
-            late.write.mode("append").parquet(dlq_path)
-        return batch.filter(~quarantine)
-
-    return split_batch

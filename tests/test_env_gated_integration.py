@@ -1,26 +1,20 @@
-"""Dormant environment-gated integration tests (round-7 verdict #6).
+"""Dormant environment-gated integration test (round-7 verdict #6).
 
 KAFKA.md documents, with captured errors, that the real Kafka broker
-round-trip and the real JDBC warehouse write are environment-impossible
-in this sandbox (no network, no connector jars, no broker, no database).
-These tests make those boundaries SELF-VERIFYING, the same way
-tests/test_stateful.py's transformWithState test does for protobuf:
-they construct the real `format("kafka")` stream and the real
-`.format("jdbc")` write, and auto-activate the day the environment
-gains the jars / endpoints — until then they skip with the documented
+round-trip is environment-impossible in this sandbox (no network, no
+connector jar, no broker). This test makes that boundary
+SELF-VERIFYING, the same way tests/test_stateful.py's
+transformWithState test does for protobuf: it constructs the real
+`format("kafka")` stream, and auto-activates the day the environment
+gains the jar and a broker — until then it skips with the documented
 reason.
 
-Gates:
-- Kafka: the spark-sql-kafka connector jar on the classpath AND a
-  reachable broker (KAFKA_BOOTSTRAP env or localhost:9092). KAFKA.md's
-  captured failure: `[unresolved dependency:
-  org.apache.spark#spark-sql-kafka-0-10_2.13;4.1.2: not found]` —
-  "No network. DNS resolution fails outright (curl rc=6)";
-  `$SITE_PACKAGES/pyspark/jars` contains zero kafka artifacts.
-- JDBC: a driver jar for the SPARK_GRAFT_JDBC_URL scheme on the
-  classpath. The existing unit tests pin the exact missing-driver
-  failure (`java.lang.ClassNotFoundException: org.postgresql.Driver`)
-  and the `--packages` hint a cluster operator needs.
+Gate: the spark-sql-kafka connector jar on the classpath AND a
+reachable broker (KAFKA_BOOTSTRAP env or localhost:9092). KAFKA.md's
+captured failure: `[unresolved dependency:
+org.apache.spark#spark-sql-kafka-0-10_2.13;4.1.2: not found]` — "No
+network. DNS resolution fails outright (curl rc=6)";
+`$SITE_PACKAGES/pyspark/jars` contains zero kafka artifacts.
 """
 
 from __future__ import annotations
@@ -50,21 +44,6 @@ def _kafka_broker() -> str | None:
             return target
     except OSError:
         return None
-
-
-def _jdbc_env() -> tuple[str, str] | None:
-    """(url, matching driver jar glob) when a JDBC target is usable."""
-    url = os.environ.get("SPARK_GRAFT_JDBC_URL", "jdbc:postgresql://localhost:5432/t")
-    globs = {
-        "postgresql": "postgresql-*.jar",
-        "mysql": "mysql-connector-*.jar",
-        "sqlite": "sqlite-jdbc-*.jar",
-    }
-    scheme = url.split(":", 2)[1] if url.startswith("jdbc:") else ""
-    g = globs.get(scheme)
-    if g and list(_pyspark_jars().glob(g)):
-        return url, g
-    return None
 
 
 @pytest.mark.skipif(
@@ -106,35 +85,3 @@ def test_kafka_broker_round_trip(spark, tmp_path):
     decoded = kc.parse_events(raw.selectExpr("CAST(value AS STRING) AS value"))
     assert decoded.count() == 100
     assert decoded.filter("event_id IS NULL").count() == 0
-
-
-@pytest.mark.skipif(
-    _jdbc_env() is None,
-    reason=(
-        "real JDBC write needs a driver jar on the classpath "
-        "(pyspark/jars has none; unit tests pin the exact "
-        "'java.lang.ClassNotFoundException: org.postgresql.Driver' "
-        "failure and the --packages hint) and a SPARK_GRAFT_JDBC_URL "
-        "endpoint. Test self-activates when the environment gains them."
-    ),
-)
-def test_jdbc_warehouse_round_trip(spark):
-    """S8 end-to-end: the distributed JDBC writer against a REAL
-    database, read back through the pushdown reader — activates only
-    on a driver-equipped deployment."""
-    from streaming_ecom_analytics_spark import catalog
-    from streaming_ecom_analytics_spark.sources import jdbc_warehouse as jw
-
-    url, _ = _jdbc_env()
-    daily = (
-        catalog.events(spark, "/root/testdata/sf0.001")
-        .groupBy("event_type")
-        .count()
-    )
-    jw.warehouse_writer(
-        daily, url=url, table="spark_graft_it_daily", mode="overwrite"
-    ).save()
-    back = jw.warehouse_reader(
-        spark, url=url, query="SELECT * FROM spark_graft_it_daily"
-    ).load()
-    assert back.count() == daily.count()

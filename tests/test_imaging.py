@@ -95,11 +95,7 @@ def test_ppm_header_with_comment():
     assert np.array_equal(imaging.decode_ppm(raw), img)
 
 
-def test_resize_nearest_and_luma():
-    img = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    small = imaging.resize_nearest(img, 2, 2)
-    assert small.shape == (2, 2)
-    assert np.array_equal(small, img[::2, ::2])
+def test_to_luma_bt601():
     rgb = np.zeros((2, 2, 3), np.uint8)
     rgb[..., 1] = 255  # pure green
     luma = imaging.to_luma(rgb)

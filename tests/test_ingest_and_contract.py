@@ -95,42 +95,6 @@ def test_parse_events_drops_malformed_timestamps(spark):
     assert [r.user_id for r in out.collect()] == ["u1"]
 
 
-def test_jdbc_warehouse_surface(spark):
-    """Writer/reader builders are pure plan construction (no DB
-    needed); an actual save without the driver jar fails with the
-    class-not-found the hint names — same boundary contract as Kafka."""
-    import pytest as _pytest
-
-    from streaming_ecom_analytics_spark.sources import jdbc_warehouse as jw
-
-    url = "jdbc:postgresql://wh.example:5432/analytics"
-    hint = jw.jdbc_driver_hint(url)
-    assert "org.postgresql:postgresql" in hint and "org.postgresql.Driver" in hint
-    with _pytest.raises(ValueError, match="unknown JDBC scheme"):
-        jw.jdbc_driver_hint("jdbc:oracle:thin:@x")
-    with _pytest.raises(ValueError, match="not a JDBC url"):
-        jw.jdbc_driver_hint("postgresql://nope")
-
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    writer = jw.warehouse_writer(
-        df, url=url, table="reporting.daily_revenue", num_partitions=4
-    )
-    with _pytest.raises(Exception, match="org.postgresql.Driver"):
-        writer.save()  # driver jar absent: fails naming exactly the class
-
-    reader = jw.warehouse_reader(
-        spark,
-        url=url,
-        query="SELECT user_id, revenue FROM reporting.top_customers",
-        partition_column="user_id",
-        lower_bound=0,
-        upper_bound=1000,
-        num_partitions=8,
-    )
-    with _pytest.raises(Exception, match="org.postgresql.Driver"):
-        reader.load()
-
-
 def test_decode_dlq_quarantines_bad_payloads(spark):
     """Ingest DLQ: corrupt JSON and gate-failing timestamps must land
     in rejects with their original bytes and a reason; valid rows

@@ -90,22 +90,3 @@ def test_zorder_constant_column_is_safe(spark):
     df = spark.range(100).selectExpr("id AS a", "42 AS b")
     out = layout.zorder_key(df, ["a", "b"], bits=8)
     assert out.count() == 100  # no divide-by-zero on zero span
-
-
-def test_compact_small_files_reduces_file_count(spark, tmp_path):
-    from streaming_ecom_analytics_spark.operators import layout
-
-    src = str(tmp_path / "frag")
-    # 40 tiny files
-    spark.range(4000).selectExpr("id", "id * 2 AS v").repartition(40).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(src + "/*.parquet")) == 40
-    stats = layout.compact_small_files(spark, src, target_bytes=1 << 30)
-    out_files = glob.glob(src + ".compact/*.parquet")
-    assert stats["files_before"] == 40 and stats["n_target"] == 1
-    assert len(out_files) == 1
-    # same data back
-    a = spark.read.parquet(src).orderBy("id").collect()
-    b = spark.read.parquet(src + ".compact").orderBy("id").collect()
-    assert a == b

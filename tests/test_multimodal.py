@@ -58,13 +58,6 @@ def test_metadata_pruning_plan(media):
     assert "media_type" in plan
 
 
-def test_frame_sample_plan(spark):
-    rows = [(1, "video", "fake", bytearray(b""), (None, None, 3500, 0))]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    frames = multimodal.frame_sample_plan(df, every_ms=1000).collect()
-    assert [r.frame_ts_ms for r in frames] == [0, 1000, 2000, 3000]
-
-
 def test_video_features_pipeline(spark):
     from streaming_ecom_analytics_spark.functions import multimodal as mm
 

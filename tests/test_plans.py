@@ -320,29 +320,6 @@ def test_interval_join_is_equi_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the same key/count must sort-merge join
-    with ZERO exchange — the co-located-join primitive at scale."""
-    from streaming_ecom_analytics_spark.sources.lake import Lake
-
-    lake = Lake(str(tmp_path))
-    ev = spark.range(0, 1000).selectExpr("id AS user_id", "id % 7 AS v")
-    dim = spark.range(0, 100).selectExpr("id AS user_id", "id * 2 AS score")
-    t1 = lake.write_bucketed(ev, "processed", "ev_b", bucket_col="user_id", n_buckets=8)
-    t2 = lake.write_bucketed(dim, "processed", "dim_b", bucket_col="user_id", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table(t1).join(spark.table(t2), on="user_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE IF EXISTS {t1}")
-        spark.sql(f"DROP TABLE IF EXISTS {t2}")
-    assert "Exchange" not in plan
-    assert "SortMergeJoin" in plan
-
-
 def test_time_rollup_reaggregates_from_cache(spark):
     """Coarser grains must re-aggregate the finer cached aggregate:
     every union branch reads an InMemoryTableScan (the plan string

@@ -3,7 +3,7 @@ pruning, int8 embedding quantization, DP-noised release.
 
 The registered queries' value-level parity runs in test_oracle_parity;
 these tests pin the operator-level contracts the oracles can't express:
-the DDSketch merge identity and α-relative-error guarantee, the
+the DDSketch α-relative-error guarantee, the
 SemDeDup keep rule on a crafted corpus, the quantization error bound on
 adversarial columns, and the DP release's determinism/shape.
 """
@@ -29,25 +29,6 @@ def _values_df(spark, vals, group=None):
 
 
 class TestDDSketch:
-    def test_merge_equals_whole_corpus_sketch(self, spark):
-        rng = np.random.default_rng(7)
-        a = rng.lognormal(2.0, 1.0, 400).tolist()
-        b = rng.lognormal(1.0, 0.5, 300).tolist()
-        whole = sk.ddsketch_build(
-            _values_df(spark, a + b), "value", alpha=ALPHA, group_cols=("grp",)
-        )
-        merged = sk.ddsketch_merge(
-            sk.ddsketch_build(
-                _values_df(spark, a), "value", alpha=ALPHA, group_cols=("grp",)
-            ),
-            sk.ddsketch_build(
-                _values_df(spark, b), "value", alpha=ALPHA, group_cols=("grp",)
-            ),
-        )
-        wrows = {(r.grp, r.bucket): r.c for r in whole.collect()}
-        mrows = {(r.grp, r.bucket): r.c for r in merged.collect()}
-        assert wrows == mrows  # merge IS the whole-corpus sketch, exactly
-
     def test_relative_error_guarantee_vs_numpy(self, spark):
         rng = np.random.default_rng(11)
         vals = np.concatenate(

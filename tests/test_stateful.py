@@ -1,5 +1,5 @@
-"""Ordered-funnel stateful operator tests: batch twin semantics, the
-streaming applyInPandasWithState path, and cross-micro-batch state."""
+"""Ordered-funnel operator tests (batch semantics), and the dormant
+transformWithState cross-batch state check."""
 
 from __future__ import annotations
 
@@ -71,68 +71,6 @@ def test_batch_funnel_strict_ordering(spark):
     out = stateful.funnel_conversions_batch(df).collect()
     got = [(r.user_id, r.seconds_to_convert) for r in out]
     assert got == [(11, 120.0)]  # user 10: none; user 11: exactly one
-
-
-def test_streaming_funnel_with_cross_batch_state(spark, tmp_path):
-    """user 1's stages split across micro-batches — state must carry."""
-    d = tmp_path / "ev"
-    batches = [ROWS[0:1], ROWS[1:2], ROWS[2:3] + ROWS[3:6]]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(
-            str(d / f"b{i}"), mode="overwrite"
-        )
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(d) + "/*")
-    )
-    out = stateful.funnel_conversions_stateful(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("conv_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # event-time timeout: the backfill drains and the query stops itself
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM conv_out").collect()
-    assert [(r.user_id, r.seconds_to_convert) for r in rows] == [(1, 300.0)]
-
-
-def test_streaming_funnel_event_time_timeout_evicts_and_tolerates_late_rows(spark, tmp_path):
-    """State expires on event time: once the watermark (newest event
-    minus the 60-minute timeout) passes a user's last event, the user is
-    evicted. A user whose only event is already behind the watermark
-    must not fail the query (a timeout may not lie behind it)."""
-
-    def t(h: int, m: int) -> dt.datetime:
-        return dt.datetime(2024, 1, 1, h, m)
-
-    batches = [
-        [(1, t(12, 0), 1, "view", 0.0, "{}"), (2, t(12, 1), 1, "cart", 0.0, "{}")],
-        # user 2 lands two hours behind the watermark; user 1 converts
-        [(3, t(10, 0), 2, "view", 0.0, "{}"), (4, t(12, 2), 1, "purchase", 0.0, "{}")],
-        # three hours later: the watermark passes user 2's timeout
-        [(5, t(15, 0), 3, "view", 0.0, "{}")],
-    ]
-    d = tmp_path / "ev"
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(str(d / f"b{i}"))
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(d) + "/*")
-    )
-    q = (
-        stateful.funnel_conversions_stateful(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("conv_late")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM conv_late").collect()
-    assert [(r.user_id, r.seconds_to_convert) for r in rows] == [(1, 120.0)]
-    removed = sum(op.numRowsRemoved for p in q.recentProgress for op in p.stateOperators)
-    assert removed >= 1
 
 
 def _has_working_protobuf() -> bool:

@@ -108,7 +108,7 @@ def test_materialized_view_refresh(spark, events_dir, tmp_path):
     agg = windows.sliding_revenue(stream, watermark="1 hour")
     q = start_materialized_view(
         agg,
-        target_path=str(tmp_path / "view"),
+        target_path={str(tmp_path / "view"): None},
         checkpoint=str(tmp_path / "ckpt"),
         output_mode="complete",
         available_now=True,
@@ -131,7 +131,7 @@ def test_checkpoint_resume_no_reprocess(spark, events_dir, tmp_path):
     for _ in range(2):  # run, then restart with same checkpoint
         q = start_materialized_view(
             agg,
-            target_path=str(tmp_path / "view"),
+            target_path={str(tmp_path / "view"): None},
             checkpoint=str(tmp_path / "ckpt"),
             output_mode="complete",
             available_now=True,
@@ -555,8 +555,11 @@ def test_windowed_leaderboard_streaming_matches_batch(spark, events_dir, tmp_pat
                 "streaming_ecom_analytics_spark.streaming.materialize",
                 fromlist=["overwrite_materializer"],
             ).overwrite_materializer(
-                str(tmp_path / "view"),
-                transform=lambda df: windows.rank_topk_per_window(df, k=2),
+                {
+                    str(tmp_path / "view"): lambda df: windows.rank_topk_per_window(
+                        df, k=2
+                    )
+                }
             )
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -615,133 +618,6 @@ def test_stream_static_enrichment_matches_batch(spark, events_dir):
         ).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_late_dlq_captures_what_watermark_would_drop(spark, events_dir, tmp_path):
-    """Drive the DLQ splitter through foreachBatch micro-batches: rows
-    behind (prior batches' max event time − watermark) — Spark's
-    actual watermark, which lags one batch — land in the DLQ parquet
-    with their batch id; on-time rows flow through to the sink."""
-    from streaming_ecom_analytics_spark.streaming.windows import (
-        late_dlq_splitter,
-    )
-
-    dlq = str(tmp_path / "dlq")
-    sink = str(tmp_path / "sink")
-    split = late_dlq_splitter(dlq, watermark="5 minutes")
-
-    def materialize(batch, bid):
-        on_time = split(batch, bid)
-        on_time.write.mode("append").parquet(sink)
-
-    q = (
-        _stream(spark, events_dir)
-        .writeStream.foreachBatch(materialize)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-
-    captured = spark.read.parquet(dlq).collect()
-    passed = spark.read.parquet(sink).collect()
-    total = spark.read.parquet(events_dir + "/*").count()
-    # fixture batch 3 carries event 6 at 10:03 alongside event 7 at
-    # 10:13; prior batches' max is 10:12, so the 5-minute mark sits at
-    # 10:07 and only event 6 is quarantined
-    assert {r.event_id for r in captured} == {6}
-    assert captured[0].dlq_batch_id is not None
-    assert len(passed) == total - 1
-    assert {r.event_id for r in passed} | {6} == set(range(1, total + 1))
-
-
-def test_late_dlq_uses_prior_batch_mark_not_own_max(spark, tmp_path):
-    """The discriminating case for the watermark's one-batch lag: a
-    row 12 minutes behind its OWN batch's max but only 4 minutes
-    behind the PRIOR batches' max must pass through (Spark's stateful
-    operator would accept it — the watermark that gates batch N was
-    computed before batch N's data was seen). A same-age row in the
-    NEXT batch, once the clock has advanced, must be quarantined."""
-    from streaming_ecom_analytics_spark.streaming.windows import (
-        late_dlq_splitter,
-    )
-
-    dlq = str(tmp_path / "dlq2")
-    split = late_dlq_splitter(dlq, watermark="5 minutes")
-    mk = lambda rows: spark.createDataFrame(rows, SCHEMA)  # noqa: E731
-
-    b0 = split(mk([(1, _t(0), 1, "view", 1.0, "{}")]), 0)
-    assert {r.event_id for r in b0.collect()} == {1}  # no mark yet
-    # batch 1: max 10:12; prior mark 10:00 → threshold 09:55 — the
-    # 10:00-batch row at 10:00 is NOT behind it; the 10:00 row would be
-    # late vs this batch's own max (10:12 − 5m = 10:07) — the old rule
-    b1 = split(
-        mk([(2, _t(0), 1, "view", 1.0, "{}"), (3, _t(12), 2, "view", 1.0, "{}")]),
-        1,
-    )
-    assert {r.event_id for r in b1.collect()} == {2, 3}
-    # batch 2: prior mark 10:12 → threshold 10:07; a 10:00 row is late
-    b2 = split(mk([(4, _t(0), 3, "view", 1.0, "{}")]), 2)
-    assert b2.count() == 0
-    assert {r.event_id for r in spark.read.parquet(dlq).collect()} == {4}
-
-
-def test_late_dlq_empty_batch_keeps_mark(spark, tmp_path):
-    """An empty micro-batch must neither crash the splitter nor
-    regress the carried high-water mark: a late row after an empty
-    batch is still judged against the pre-gap mark."""
-    from streaming_ecom_analytics_spark.streaming.windows import (
-        late_dlq_splitter,
-    )
-
-    dlq = str(tmp_path / "dlq3")
-    split = late_dlq_splitter(dlq, watermark="5 minutes")
-    mk = lambda rows: spark.createDataFrame(rows, SCHEMA)  # noqa: E731
-    empty = spark.createDataFrame([], SCHEMA)
-
-    split(mk([(1, _t(12), 1, "view", 1.0, "{}")]), 0)  # establishes mark
-    out_empty = split(empty, 1)
-    assert out_empty.count() == 0  # no rows, no crash
-    # 10:00 row vs mark 10:12 - 5m = 10:07 -> still late after the gap
-    out = split(mk([(2, _t(0), 2, "view", 1.0, "{}")]), 2)
-    assert out.count() == 0
-    assert {r.event_id for r in spark.read.parquet(dlq).collect()} == {2}
-
-
-def test_late_dlq_null_event_time_quarantined_not_lost(spark, tmp_path):
-    """NULL event-time rows must not vanish (r5 advisor finding): a
-    three-valued late predicate excluded them from BOTH the on-time
-    and the DLQ side. Contract now: NULL ts rows land in the DLQ in
-    every batch — including the first, pre-mark one — and the on-time
-    side never contains them."""
-    from streaming_ecom_analytics_spark.streaming.windows import (
-        late_dlq_splitter,
-    )
-
-    dlq = str(tmp_path / "dlq_null")
-    split = late_dlq_splitter(dlq, watermark="5 minutes")
-    mk = lambda rows: spark.createDataFrame(rows, SCHEMA)  # noqa: E731
-
-    # batch 0: no mark yet — real rows pass, NULL ts still quarantined
-    b0 = split(
-        mk([(1, _t(12), 1, "view", 1.0, "{}"), (2, None, 1, "view", 1.0, "{}")]),
-        0,
-    )
-    assert {r.event_id for r in b0.collect()} == {1}
-    # batch 1: mark established — NULL ts and a genuinely late row both
-    # quarantine; the on-time row survives
-    b1 = split(
-        mk(
-            [
-                (3, _t(13), 2, "view", 1.0, "{}"),
-                (4, None, 2, "view", 1.0, "{}"),
-                (5, _t(0), 3, "view", 1.0, "{}"),
-            ]
-        ),
-        1,
-    )
-    assert {r.event_id for r in b1.collect()} == {3}
-    assert {r.event_id for r in spark.read.parquet(dlq).collect()} == {2, 4, 5}
 
 
 def test_windowed_ddsketch_streaming_matches_batch(spark, events_dir):

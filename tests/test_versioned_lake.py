@@ -10,11 +10,11 @@ import pytest
 
 from streaming_ecom_analytics_spark.sources.versioned_lake import VersionedTable
 
-# Deep tier (round-11 verdict #2: the default suite must fit the
-# driver's pytest window — these two 20-30-micro-batch soaks alone cost
-# ~5 min of streaming-engine fixed cost). The fast materializer tests
-# below cover the same operators per-commit; the soaks add restart +
-# vacuum endurance and run once per round via round_close_chain.sh
+# Deep tier (round-11 verdict #2: the default suite must fit its time
+# budget — a 24-micro-batch soak costs minutes of streaming-engine
+# fixed cost). The fast materializer test below covers
+# the same operator per-commit; the soak adds restart + vacuum
+# endurance and runs once per round via round_close_chain.sh
 # (SPARK_GRAFT_DEEP_TESTS=1).
 deep_tier = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_DEEP_TESTS"),
@@ -134,132 +134,6 @@ def test_read_empty_table_raises(spark, table):
 def test_rejects_unknown_mode(spark, table):
     with pytest.raises(ValueError, match="overwrite|append"):
         table.commit(_df(spark, ["a"]), mode="merge")
-
-
-@deep_tier
-def test_versioned_materializer_soak_with_restart(spark, tmp_path):
-    """The overwrite-snapshot half of the materializer family, soaked
-    (round-4 verdict #7): 20 micro-batches of a complete-mode count
-    aggregate committed as versions, with a stop + checkpoint restart
-    after batch 10. One version per refresh (no replay), the final
-    snapshot equals the batch twin over all events, and every refresh
-    stays time-travelable."""
-    import datetime as dt
-
-    from streaming_ecom_analytics_spark.streaming.materialize import (
-        versioned_materializer,
-    )
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    types = ["view", "cart", "purchase"]
-    batches = [
-        [
-            (
-                b * 2 + j,
-                dt.datetime(2024, 1, 1, 10, b, j),
-                (b + j) % 4,
-                types[(b + j) % 3],
-                1.0,
-                "{}",
-            )
-            for j in range(2)
-        ]
-        for b in range(20)
-    ]
-    src = tmp_path / "events"
-
-    def write(lo, hi):
-        for i in range(lo, hi):
-            spark.createDataFrame(batches[i], schema).coalesce(1).write.parquet(
-                str(src / f"batch_{i:02d}"), mode="overwrite"
-            )
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src) + "/*")
-        )
-        agg = stream.groupBy("event_type").count()
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(versioned_materializer(str(tmp_path / "view")))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    write(0, 10)
-    run()
-    table = VersionedTable(str(tmp_path / "view"))
-    assert len(table.versions()) == 10
-    write(10, 20)
-    run()  # restart from checkpoint
-    assert len(table.versions()) == 20
-
-    allrows = [r for b in batches for r in b]
-    want = {}
-    for r in allrows:
-        want[r[3]] = want.get(r[3], 0) + 1
-    got = {r.event_type: r["count"] for r in table.read(spark).collect()}
-    assert got == want
-    # version 9 is the complete-mode state after the first 10 batches
-    first10 = {}
-    for b in batches[:10]:
-        for r in b:
-            first10[r[3]] = first10.get(r[3], 0) + 1
-    got10 = {r.event_type: r["count"] for r in table.read(spark, version=9).collect()}
-    assert got10 == first10
-
-
-def test_versioned_materializer_streaming_refresh(spark, tmp_path):
-    """A streaming aggregate materialized through versioned commits:
-    the final snapshot equals the batch answer, and every micro-batch
-    refresh remains time-travelable."""
-    import datetime as dt
-
-    from streaming_ecom_analytics_spark.streaming import windows
-    from streaming_ecom_analytics_spark.streaming.materialize import (
-        versioned_materializer,
-    )
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    batches = [
-        [(1, dt.datetime(2024, 1, 1, 10, 0), 1, "view", 1.0, "{}")],
-        [(2, dt.datetime(2024, 1, 1, 10, 6), 1, "view", 1.0, "{}")],
-    ]
-    src = tmp_path / "events"
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / f"batch_{i}"), mode="overwrite"
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    agg = windows.tumbling_event_counts(stream, watermark="1 hour")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(versioned_materializer(str(tmp_path / "view")))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    table = VersionedTable(str(tmp_path / "view"))
-    assert len(table.versions()) == 2  # one snapshot per micro-batch
-    latest = table.read(spark)
-    batch = spark.read.parquet(str(src) + "/*")
-    want = windows.tumbling_event_counts(batch, watermark=None)
-    assert sorted(map(tuple, latest.collect())) == sorted(map(tuple, want.collect()))
-    # the first refresh (one event seen) is still readable
-    v0 = table.read(spark, version=0)
-    assert v0.agg({"event_count": "sum"}).first()[0] == 1
 
 
 def test_cdc_upsert_materializer_stream(spark, tmp_path):
