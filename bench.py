@@ -17,13 +17,6 @@ factor and prints ONE compact JSON line for the driver
   runs never clobber a committed artifact, round-10 verdict #4).
 - Default is median of 3 full passes ($SPARK_GRAFT_RUNS to override) so
   the driver's own artifact benefits from noise suppression too.
-- ``--changed-since <git-ref>`` (round-7 verdict #8) restricts the run
-  to queries whose defining plans module changed since the ref, plus
-  the 25 heaviest per the last committed BENCH_LOCAL artifact — the
-  fast iteration loop; the authoritative close-of-round artifact stays
-  the FULL sweep (no flag). When engine code outside plans/ changed,
-  the heaviest-set widens to 50 (an operator change can shift any
-  query that composes it) and the affected files are listed on stderr.
 """
 
 from __future__ import annotations
@@ -41,68 +34,10 @@ from streaming_ecom_analytics_spark.plans import REGISTRY  # noqa: E402
 from streaming_ecom_analytics_spark.session import get_spark  # noqa: E402
 
 
-def _changed_subset(ref: str) -> list[str]:
-    """Query names to bench for --changed-since: plans-module changes map
-    precisely (fn.__module__ file), everything else via the heaviest-N
-    safety net from the last full BENCH_LOCAL map."""
-    import glob
-    import subprocess
-
-    changed = subprocess.run(
-        ["git", "diff", "--name-only", ref, "--", "streaming_ecom_analytics_spark"],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        check=True,
-    ).stdout.split()
-    changed_set = set(changed)
-    engine_nonplans = sorted(
-        f for f in changed_set
-        if not f.startswith("streaming_ecom_analytics_spark/plans/")
-    )
-    names = [
-        name
-        for name, rq in REGISTRY.items()
-        if sys.modules[rq.fn.__module__].__file__ is not None
-        and str(
-            Path(sys.modules[rq.fn.__module__].__file__).resolve().relative_to(REPO)
-        )
-        in changed_set
-    ]
-    heaviest_n = 50 if engine_nonplans else 25
-    if engine_nonplans:
-        print(
-            f"bench: engine files outside plans/ changed since {ref} "
-            f"({engine_nonplans}); widening the heaviest-set to {heaviest_n}",
-            file=sys.stderr,
-        )
-    benches = sorted(
-        glob.glob(str(REPO / "BENCH_LOCAL_r*.json")),
-        key=lambda p: int("".join(c for c in Path(p).stem if c.isdigit()) or 0),
-    )
-    if benches:
-        with open(benches[-1]) as fh:
-            last = json.load(fh).get("queries", {})
-        heavy = sorted(last, key=last.get, reverse=True)[:heaviest_n]
-        names += [n for n in heavy if n in REGISTRY]
-    return sorted(set(names))
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    bench_registry = dict(REGISTRY)
-    mode = "full"
-    if "--changed-since" in sys.argv:
-        ref = sys.argv[sys.argv.index("--changed-since") + 1]
-        subset = _changed_subset(ref)
-        bench_registry = {n: REGISTRY[n] for n in subset}
-        mode = f"changed-since:{ref}"
-        print(
-            f"bench: {mode} -> {len(bench_registry)}/{len(REGISTRY)} queries",
-            file=sys.stderr,
-        )
     spark = get_spark(app_name="bench")
 
     from streaming_ecom_analytics_spark.caching import (
@@ -125,7 +60,7 @@ def main() -> None:
         warm_dir = "/root/testdata/sf0.001"
         warm = warm_dir if os.path.isdir(warm_dir) else sf_dir
         warm_failures = []
-        for name, rq in sorted(bench_registry.items()):
+        for name, rq in sorted(REGISTRY.items()):
             try:
                 rq.fn(spark, warm).write.format("noop").mode("overwrite").save()
             except Exception as exc:  # never sink the bench, but NEVER silently:
@@ -150,7 +85,7 @@ def main() -> None:
     # records the per-query MEDIAN, so round-over-round comparisons see
     # plans, not single-pass machine-load noise (round-4 verdict #3).
     runs = max(1, int(os.environ.get("SPARK_GRAFT_RUNS", "3")))
-    samples: dict[str, list[float]] = {name: [] for name in bench_registry}
+    samples: dict[str, list[float]] = {name: [] for name in REGISTRY}
     # Interleaved host stamps (round-10 verdict task #1a): the r10
     # driver bench was 33% slower than the builder close DESPITE
     # healthier end-of-run GEMM/JVM stamps — contention arrived during,
@@ -163,7 +98,7 @@ def main() -> None:
     bench_t0 = time.perf_counter()
     executed = 0
     for _ in range(runs):
-        for name, rq in sorted(bench_registry.items()):
+        for name, rq in sorted(REGISTRY.items()):
             t0 = time.perf_counter()
             rq.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples[name].append(time.perf_counter() - t0)
@@ -198,7 +133,7 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf),
         "runs": runs,
-        "mode": mode,
+        "mode": "full",
         "aggregation": "median" if runs > 1 else "single",
         "host": host,
         "host_interleaved": interleaved,
@@ -208,9 +143,7 @@ def main() -> None:
     # (round-10 verdict #4). Round-close chains pass
     # SPARK_GRAFT_BENCH_OUT=BENCH_LOCAL_r{N}.json explicitly; everything
     # else lands in a scratch file.
-    default_out = (
-        REPO / "BENCH_FULL_LATEST.json" if mode == "full" else REPO / "BENCH_CHANGED.json"
-    )
+    default_out = REPO / "BENCH_FULL_LATEST.json"
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", str(default_out))
     try:
         with open(out_path, "w") as fh:
@@ -230,7 +163,7 @@ def main() -> None:
         "sf": float(sf),
         "runs": runs,
         "n_queries": len(timings),
-        "mode": mode,
+        "mode": "full",
         "sec_per_query": round(total / max(1, len(timings)), 3),
         "full_map": os.path.basename(out_path),
         # host-throughput stamp: BLAS GFLOP/s + JVM codegen Mrows/s at

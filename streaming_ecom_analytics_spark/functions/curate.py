@@ -1,5 +1,5 @@
 """Corpus curation — the operators composed into one training-data
-pipeline, plus the streaming deduplication surface.
+pipeline.
 
 ``curate_documents`` is the canonical pretraining-cleanup chain:
 
@@ -11,11 +11,6 @@ projections into one pass over the corpus; only the dedup stages
 shuffle). The near-dup stage uses MinHash+LSH — the 100 TB path — and
 removes the LARGER doc_id of each similar pair (keep-first policy,
 deterministic).
-
-``dedup_stream`` is the streaming-native exact dedup:
-dropDuplicatesWithinWatermark keeps state only within the watermark
-horizon — the unbounded-stream analogue of the batch content-hash
-groupBy.
 """
 
 from __future__ import annotations
@@ -91,23 +86,6 @@ def curate_documents(
         )
     losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
     return kept.join(losers, on=id_col, how="left_anti")
-
-
-def dedup_stream(
-    events: DataFrame,
-    *,
-    key_cols: tuple[str, ...] = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: at-least-once sources (Kafka replays,
-    producer retries) become effectively-once within the watermark
-    horizon. State is bounded — keys older than the watermark are
-    evicted, which is the only way dedup state survives an unbounded
-    stream."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        [*key_cols]
-    )
 
 
 def split_exprs(

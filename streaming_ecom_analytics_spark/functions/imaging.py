@@ -24,7 +24,8 @@ WebP and AVIF stay stubbed — lossy WebP needs VP8's boolean
 arithmetic decoder and AVIF needs AV1; lossless WebP (VP8L) is
 prefix-coded but still a full transform+LZ77+color-cache pipeline —
 all deliberately out of scope rather than half-implemented.
-``multimodal.decode_image`` sniffs magic bytes and routes here first.
+``multimodal.decode_image_with_status`` sniffs magic bytes and routes
+here first.
 """
 
 from __future__ import annotations

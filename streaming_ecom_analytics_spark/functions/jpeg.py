@@ -1,7 +1,7 @@
 """Dependency-free baseline JPEG codec (pure numpy), from the public
 ITU-T T.81 spec — closes the "JPEG stays stubbed" gap in
-``functions/imaging.py`` so ``multimodal.decode_image`` covers the
-dominant ML-dataset image format for real.
+``functions/imaging.py`` so ``multimodal.decode_image_with_status``
+covers the dominant ML-dataset image format for real.
 
 Scope (the baseline-sequential subset that covers the overwhelming
 majority of dataset JPEGs):
@@ -22,7 +22,7 @@ majority of dataset JPEGs):
 
 Progressive (SOF2), arithmetic coding, 12-bit precision, and CMYK
 raise ValueError with a precise message — callers fall back per
-``multimodal.decode_image``'s documented contract.
+``multimodal.decode_image_with_status``'s documented contract.
 
 Reference context: DrUkachi/streaming-ecom-analytics has no media
 path at all; this module serves the brief's multimodal-column tier

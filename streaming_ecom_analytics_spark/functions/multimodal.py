@@ -176,11 +176,6 @@ def decode_image_with_status(
     return _fake_decode(content, width, height), "fake"
 
 
-def decode_image(content: bytes, width: int, height: int, *, fake: bool = False) -> np.ndarray:
-    """Decode one image to a uint8 array (see decode_image_with_status)."""
-    return decode_image_with_status(content, width, height, fake=fake)[0]
-
-
 def image_features(
     media: DataFrame, *, target_dim: int = 16, fake_decode: bool = True
 ) -> DataFrame:

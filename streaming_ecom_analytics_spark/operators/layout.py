@@ -9,11 +9,13 @@ of several quantized columns into one sort key, so range-partitioning
 by that key co-locates rows that are close in EVERY dimension —
 parquet row-group stats then skip most of a 100 TB table for
 multi-column point/range predicates (the layout trick behind
-Delta/Iceberg OPTIMIZE ZORDER, here as a plain engine op).
+Delta/Iceberg OPTIMIZE ZORDER). ``zorder_key`` computes that key; the
+registered ``zorder_data_skipping`` report groups rows by its high bits
+to measure the skipping a z-ordered write would buy.
 
 Everything is built-in column expressions (shifts, masks, ORs) — no
 UDF; the only non-scan work is one scalar min/max aggregate per column
-(broadcast back as literals) and the range repartition's sampling pass.
+(broadcast back as literals).
 """
 
 from __future__ import annotations
@@ -73,28 +75,3 @@ def zorder_key(
     )
     return with_bounds.select(*df.columns, z.alias("__z"))
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    *,
-    n_files: int,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered by the Z-order of ``cols``.
-
-    Range-partition on the interleaved key (Spark samples the key
-    distribution — no global sort), sort within each output file so
-    row-group stats are tight, then drop the key. Readers need no
-    cooperation: pushed min/max predicates on ANY of ``cols`` now skip
-    whole files/row-groups.
-    """
-    (
-        zorder_key(df, cols, bits=bits)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -4181,15 +4181,14 @@ _ZORDER_SKIP_ORACLE = f"""
 
 @register("zorder_data_skipping", _ZORDER_SKIP_ORACLE)
 def q_zorder_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout effectiveness report — the driver-checkable twin
-    of operators/layout.py (whose file-level behavior is pinned by
-    tests/test_layout.py against real parquet row-group stats): Morton-
-    interleave (user_id, value) at 8 bits/dim, group rows into the
-    64-cell z-buckets a z-ordered writer would emit as files, and emit
-    each bucket's min/max envelope plus whether a two-column probe box
-    (user_id 40-80 AND value 100-200) would have to scan it. At 100 TB
+    """Z-order layout effectiveness report over operators/layout.py's
+    ``zorder_key``: Morton-interleave (user_id, value) at 8 bits/dim,
+    group rows into the 64-cell z-buckets a z-ordered writer would emit
+    as files, and emit each bucket's min/max envelope plus whether a
+    two-column probe box (user_id 40-80 AND value 100-200) would have
+    to scan it. At 100 TB
     the `scanned` column IS the file-skipping decision parquet min/max
-    stats make after write_zordered; SUM(rows_matching)/SUM(n_rows
+    stats make on a z-ordered layout; SUM(rows_matching)/SUM(n_rows
     WHERE scanned) is the measured selectivity the layout buys. The
     whole plan is one scalar min/max aggregate (broadcast back) + one
     hash aggregate on the interleaved key — bit-exact integer/double

@@ -53,12 +53,6 @@ _WIRE_SCHEMA = T.StructType(
         *[f for f in ECOM_EVENT_SCHEMA.fields if f.name != "event_time"],
     ]
 )
-# decode_events_with_dlq's: PERMISSIVE from_json yields an all-null
-# struct (not NULL) for malformed input; the corrupt-record column is the
-# supported way to see the failure AND keep the bytes.
-_DLQ_SCHEMA = T.StructType(
-    [*_WIRE_SCHEMA.fields, T.StructField("_corrupt_record", T.StringType(), True)]
-)
 
 
 def serialize_events(
@@ -144,46 +138,3 @@ def kafka_source(
         .load()
     )
 
-
-def decode_events_with_dlq(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """parse_events, but nothing is dropped silently: returns
-    ``(events, rejects)`` where rejects carries the ORIGINAL payload of
-    every row that failed JSON parsing or the producer's timestamp
-    gate, tagged with the reason — the ingest-side dead-letter queue.
-
-    Both frames share one parse subplan; the reject payload survives
-    byte-for-byte for replay after a producer fix. At 100 TB the DLQ
-    write is append-only parquet partitioned by reject_reason.
-    """
-    payload = F.col("value").cast("string")
-    tagged = raw.select(
-        payload.alias("__raw"),
-        F.from_json(
-            payload,
-            _DLQ_SCHEMA,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ).alias("e"),
-    ).withColumn(
-        "reject_reason",
-        F.when(
-            F.col("e").isNull() | F.col("e._corrupt_record").isNotNull(),
-            F.lit("unparseable_json"),
-        )
-        .when(
-            ~F.coalesce(
-                F.col("e.event_time").rlike(EVENT_TIME_PATTERN), F.lit(False)
-            ),
-            F.lit("bad_event_time"),
-        )
-        .otherwise(F.lit(None)),
-    )
-    events = (
-        tagged.filter(F.col("reject_reason").isNull())
-        .select("e.*")
-        .drop("_corrupt_record")
-        .withColumn("event_time", F.to_timestamp("event_time"))
-    )
-    rejects = tagged.filter(F.col("reject_reason").isNotNull()).select(
-        F.col("__raw").alias("raw_payload"), "reject_reason"
-    )
-    return events, rejects

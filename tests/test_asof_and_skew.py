@@ -1,4 +1,5 @@
-"""As-of join semantics + salting equivalence tests."""
+"""As-of and interval join semantics, the NOT IN null trap, and AQE
+skew-join splitting."""
 
 from __future__ import annotations
 
@@ -8,10 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from streaming_ecom_analytics_spark.operators.asof import asof_join
-from streaming_ecom_analytics_spark.operators.skew import (
-    salted_count_distinct,
-    salted_join,
-)
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
@@ -68,48 +65,6 @@ def test_not_in_null_trap_vs_left_anti(spark):
     assert [r.k for r in anti.collect()] == [1]  # left_anti keeps row 1
 
 
-def test_salted_count_distinct_matches_plain(spark, events):
-    plain = (
-        events.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n_distinct"))
-        .collect()
-    )
-    salted = salted_count_distinct(
-        events, group_cols=["event_type"], distinct_col="user_id", n_salts=4
-    ).collect()
-    assert sorted((r.event_type, r.n_distinct) for r in plain) == sorted(
-        (r.event_type, r.n_distinct) for r in salted
-    )
-
-
-def test_salted_count_distinct_ignores_nulls(spark):
-    """COUNT(DISTINCT x) ignores NULLs — the salted plan must too."""
-    rows = [("a", 1), ("a", 2), ("a", None), ("b", None), ("b", None)]
-    df = spark.createDataFrame(rows, "g string, x long")
-    plain = {
-        r.g: r.n
-        for r in df.groupBy("g").agg(F.countDistinct("x").alias("n")).collect()
-    }
-    salted = {
-        r.g: r.n_distinct
-        for r in salted_count_distinct(
-            df, group_cols=["g"], distinct_col="x", n_salts=4
-        ).collect()
-    }
-    assert plain == {"a": 2, "b": 0}
-    # groupBy drops the all-NULL group entirely in the salted plan
-    # (no surviving rows), which agrees with COUNT DISTINCT = 0 rows
-    assert salted == {"a": 2}
-
-
-def test_salted_join_rejects_outer(spark):
-    big = spark.createDataFrame([(1, "x")], "k long, payload string")
-    small = spark.createDataFrame([(1, "a")], "k long, tag string")
-    for how in ("right", "full", "full_outer"):
-        with pytest.raises(ValueError, match="salted_join supports"):
-            salted_join(big, small, on="k", how=how)
-
-
 def test_asof_join_tie_deterministic(spark):
     """Multiple right rows at the same (key, ts): the greatest value
     tuple must win, under any partitioning."""
@@ -123,59 +78,10 @@ def test_asof_join_tie_deterministic(spark):
         assert [r.asof_value for r in out] == [30.0]
 
 
-def test_salted_join_matches_plain(spark):
-    big = spark.createDataFrame(
-        [(i % 3, f"row{i}") for i in range(100)], "k long, payload string"
-    )
-    small = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "k long, tag string")
-    plain = big.join(small, on="k").select("k", "payload", "tag").collect()
-    salted = salted_join(big, small, on="k", n_salts=4).select("k", "payload", "tag").collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-
-
-def test_salted_join_hot_key_agrees_and_spreads(spark):
-    """Injected hot key (90% of 50k rows on one key): the salted and
-    unsalted joins must agree row-for-row in aggregate, and the salt
-    must actually SPREAD the hot key — the max (key, salt) reducer
-    group is a fraction of the hot key's row count, so no single
-    reducer owns the hot partition (round-5 verdict #8)."""
-    n, n_salts = 50_000, 16
-    big = spark.range(n).select(
-        F.when(F.col("id") % 10 < 9, F.lit(0)).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.range(64).select(F.col("id").alias("k"), (F.col("id") * 2).alias("w"))
-    plain = (
-        big.join(small, on="k")
-        .agg(F.count("*").alias("c"), F.sum(F.col("v") + F.col("w")).alias("s"))
-        .collect()[0]
-    )
-    salted = (
-        salted_join(big, small, on="k", n_salts=n_salts)
-        .agg(F.count("*").alias("c"), F.sum(F.col("v") + F.col("w")).alias("s"))
-        .collect()[0]
-    )
-    assert (plain.c, plain.s) == (salted.c, salted.s) and plain.c >= int(n * 0.9)
-    # the hot key's rows must spread across many salt sub-keys: no
-    # (key, salt) group may hold more than ~3x the ideal 1/n_salts share
-    hot = int(n * 0.9)
-    spread = (
-        big.withColumn(
-            "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts))
-        )
-        .where(F.col("k") == 0)
-        .groupBy("__salt")
-        .count()
-        .collect()
-    )
-    assert len(spread) == n_salts
-    assert max(r["count"] for r in spread) < 3 * hot / n_salts
-
-
 def test_aqe_skew_join_splits_injected_hot_partition(spark):
     """AQE's skew-join path (on by default in session.py) is the
-    automatic counterpart of salting — lock it the way broadcast
-    gating is locked: with thresholds tuned down and broadcast off, a
+    engine's skew mitigation — lock it the way broadcast gating is
+    locked: with thresholds tuned down and broadcast off, a
     join against an injected hot key must execute as a SortMergeJoin
     the adaptive planner marks skew=true (i.e. the oversized shuffle
     partition was actually split), and the answer must match the

@@ -1,4 +1,4 @@
-"""Curation pipeline + streaming dedup tests."""
+"""Curation pipeline tests."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from streaming_ecom_analytics_spark.functions.curate import curate_documents, dedup_stream
+from streaming_ecom_analytics_spark.functions.curate import curate_documents
 
 GOOD = (
     "the quick brown fox jumps over the lazy dog and it is a fine day "
@@ -45,30 +45,6 @@ def test_curate_language_filter(corpus):
         corpus, min_quality=0.5, keep_langs=("en",), near_dup_threshold=0.6
     )
     assert sorted(r.doc_id for r in out.collect()) == [1]  # french doc 6 dropped
-
-
-def test_dedup_stream(spark, tmp_path):
-    t0 = dt.datetime(2024, 1, 1, 10, 0)
-    rows = [
-        (1, t0, 1, "view", 1.0, "{}"),
-        (1, t0, 1, "view", 1.0, "{}"),  # duplicate event_id (producer retry)
-        (2, t0 + dt.timedelta(minutes=1), 1, "view", 1.0, "{}"),
-    ]
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    d = tmp_path / "ev"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(d / "b0"))
-    stream = spark.readStream.schema(schema).parquet(str(d) + "/*")
-    out = dedup_stream(stream, key_cols=("event_id",))
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT event_id FROM dedup_out").collect()
-    assert sorted(r.event_id for r in got) == [1, 2]
 
 
 def test_assign_splits_deterministic_and_proportional(spark):

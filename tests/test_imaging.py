@@ -106,18 +106,18 @@ def test_to_luma_bt601():
 def test_decode_image_sniffs_real_formats():
     rng = np.random.default_rng(4)
     img = rng.integers(0, 256, size=(5, 6, 3), dtype=np.uint8)
-    out = multimodal.decode_image(imaging.encode_png(img), 6, 5)
+    out = multimodal.decode_image_with_status(imaging.encode_png(img), 6, 5)[0]
     assert np.array_equal(out, img)
     grey = rng.integers(0, 256, size=(5, 6), dtype=np.uint8)
-    out = multimodal.decode_image(imaging.encode_ppm(grey), 6, 5)
+    out = multimodal.decode_image_with_status(imaging.encode_ppm(grey), 6, 5)[0]
     assert np.array_equal(out, grey)
     # JPEG now routes to the real baseline decoder (functions/jpeg.py);
     # a truncated stream fails loudly rather than yielding pixels
     with pytest.raises(ValueError, match="SOF"):
-        multimodal.decode_image(b"\xff\xd8\xff JPEG bytes", 2, 2)
+        multimodal.decode_image_with_status(b"\xff\xd8\xff JPEG bytes", 2, 2)[0]
     # WebP remains the honestly-stubbed boundary
     with pytest.raises(NotImplementedError, match="WebP"):
-        multimodal.decode_image(b"RIFF\x00\x00\x00\x00WEBP", 2, 2)
+        multimodal.decode_image_with_status(b"RIFF\x00\x00\x00\x00WEBP", 2, 2)[0]
 
 
 def test_image_features_over_real_codecs(spark):
@@ -143,7 +143,7 @@ def test_gif_roundtrip_and_features():
     enc = gif.encode_gif(img)
     assert imaging.sniff_format(enc) == "gif"
     assert np.array_equal(gif.decode_gif(enc)[0], img)  # lossless
-    assert np.array_equal(multimodal.decode_image(enc, 33, 21), img)
+    assert np.array_equal(multimodal.decode_image_with_status(enc, 33, 21)[0], img)
     with pytest.raises(ValueError, match="256 unique"):
         gif.encode_gif(rng.integers(0, 256, (64, 64, 3), dtype=np.uint8))
 
@@ -170,7 +170,7 @@ def test_bmp_roundtrip_and_row_orders():
     enc = imaging.encode_bmp(img)
     assert imaging.sniff_format(enc) == "bmp"
     assert np.array_equal(imaging.decode_bmp(enc), img)
-    assert np.array_equal(multimodal.decode_image(enc, 14, 13), img)
+    assert np.array_equal(multimodal.decode_image_with_status(enc, 14, 13)[0], img)
     # hand-build a TOP-DOWN 32bpp variant and check row order handling
     import struct
 

@@ -93,32 +93,3 @@ def test_parse_events_drops_malformed_timestamps(spark):
     )
     out = parse_events(bad)
     assert [r.user_id for r in out.collect()] == ["u1"]
-
-
-def test_decode_dlq_quarantines_bad_payloads(spark):
-    """Ingest DLQ: corrupt JSON and gate-failing timestamps must land
-    in rejects with their original bytes and a reason; valid rows
-    parse as usual; nothing vanishes."""
-    from streaming_ecom_analytics_spark.sources.kafka_contract import (
-        decode_events_with_dlq,
-        serialize_events,
-    )
-
-    import datetime as dt
-
-    good = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 10, 0, 0), 5, "view", 1.0, "{}")],
-        "event_id long, event_time timestamp, user_id long, event_type string,"
-        " price double, props string",
-    )
-    wire = serialize_events(good).select("value")
-    bad = spark.createDataFrame(
-        [("{not json",), ('{"event_time": "01/01/2024", "event_id": 9}',)],
-        "value string",
-    )
-    events, rejects = decode_events_with_dlq(wire.unionByName(bad))
-    assert events.count() == 1
-    got = {r.reject_reason for r in rejects.collect()}
-    assert got == {"unparseable_json", "bad_event_time"}
-    raws = {r.raw_payload for r in rejects.collect()}
-    assert "{not json" in raws  # original bytes preserved

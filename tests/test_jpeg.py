@@ -123,7 +123,7 @@ def test_sniff_and_decode_image_route_jpeg():
     img = _gradient_rgb(12, 20)
     enc = jpeg.encode_jpeg(img)
     assert imaging.sniff_format(enc) == "jpeg"
-    dec = multimodal.decode_image(enc, 20, 12, fake=False)
+    dec = multimodal.decode_image_with_status(enc, 20, 12, fake=False)[0]
     assert dec.shape == (12, 20, 3)
 
 

@@ -1,80 +1,10 @@
-"""Z-order layout: the written files must be clustered in EVERY
-z-ordered dimension, so parquet min/max stats can skip files for
-multi-column predicates."""
+"""Z-order key: deterministic, bounded, and safe on a zero-span
+column. The registered ``zorder_data_skipping`` report over it is
+checked in test_retrieval_layout.py."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
-
 from streaming_ecom_analytics_spark.operators import layout
-
-
-def _file_spans(path: str, cols: list[str]) -> list[dict[str, tuple[float, float]]]:
-    spans = []
-    for f in sorted(glob.glob(path + "/part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        lo = {c: float("inf") for c in cols}
-        hi = {c: float("-inf") for c in cols}
-        for rg in range(md.num_row_groups):
-            row = md.row_group(rg)
-            for i in range(row.num_columns):
-                col = row.column(i)
-                name = col.path_in_schema
-                if name in cols and col.statistics is not None:
-                    lo[name] = min(lo[name], col.statistics.min)
-                    hi[name] = max(hi[name], col.statistics.max)
-        spans.append({c: (lo[c], hi[c]) for c in cols})
-    return spans
-
-
-def _mean_bbox_area(spans, cols, width: float) -> float:
-    areas = []
-    for s in spans:
-        a = 1.0
-        for c in cols:
-            a *= (s[c][1] - s[c][0]) / width
-        areas.append(a)
-    return sum(areas) / len(areas)
-
-
-def test_zorder_shrinks_per_file_bounding_boxes(spark, tmp_path):
-    # 2-D grid: x row-major, y column-major — under the NATURAL order
-    # (by x) every file spans ALL of y, so its bbox area is ~1/n_files
-    # of x times 100% of y. Z-order must produce near-square tiles with
-    # far smaller area per file.
-    n = 128
-    df = spark.range(n * n).selectExpr(
-        "CAST(id % 128 AS LONG) AS x", "CAST(id DIV 128 AS LONG) AS y", "id AS payload"
-    )
-    cols = ["x", "y"]
-
-    natural = str(tmp_path / "natural")
-    df.orderBy("x", "y").coalesce(16).write.mode("overwrite").parquet(natural)
-    zordered = str(tmp_path / "zordered")
-    layout.write_zordered(df, zordered, cols, n_files=16, bits=7)
-
-    nat_area = _mean_bbox_area(_file_spans(natural, cols), cols, n - 1)
-    z_area = _mean_bbox_area(_file_spans(zordered, cols), cols, n - 1)
-    # 16 z-tiles of a 128×128 grid are 32×32 blocks → area 1/16 ≈ 0.0625
-    # (with boundary slack); the x-sorted layout has area ≈ 1/16 in x
-    # but full y span... equal! The real difference: a predicate on Y
-    # alone. Assert both the area and the single-dimension pruning win.
-    assert z_area < 0.2
-
-    def files_hit(spans, c, lo, hi):
-        return sum(1 for s in spans if not (s[c][1] < lo or s[c][0] > hi))
-
-    nat_spans = _file_spans(natural, cols)
-    z_spans = _file_spans(zordered, cols)
-    # narrow band predicate on y (the non-sort dimension for natural)
-    nat_hits = files_hit(nat_spans, "y", 10, 20)
-    z_hits = files_hit(z_spans, "y", 10, 20)
-    assert nat_hits == len(nat_spans)  # natural layout: every file hit
-    assert z_hits <= len(z_spans) // 2  # z-order: most files skipped
-    # and x-band predicates must still prune too (not worse than half)
-    assert files_hit(z_spans, "x", 10, 20) <= len(z_spans) // 2
 
 
 def test_zorder_key_is_deterministic_and_bounded(spark):

@@ -25,7 +25,7 @@ def test_image_features_shape_and_determinism(media):
 
 def test_real_decode_is_stubbed():
     with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\x00\x01", 1, 2, fake=False)
+        multimodal.decode_image_with_status(b"\x00\x01", 1, 2, fake=False)[0]
 
 
 def test_decode_status_labels_fake_rows(media):

@@ -229,6 +229,6 @@ class TestBenchOutputPath:
 
         assert callable(importlib.import_module("bench").main)
         src = (REPO / "bench.py").read_text()
-        assert 'REPO / "BENCH_FULL_LATEST.json" if mode == "full"' in src
+        assert 'default_out = REPO / "BENCH_FULL_LATEST.json"' in src
         # no default write path may target the committed per-round files
         assert 'default_out = (\n        REPO / "BENCH_LOCAL_r' not in src
